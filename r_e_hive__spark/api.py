@@ -56,9 +56,17 @@ an explicit ``ts``; ``as_of`` is fixed at construction; generated ids are
 ``max(existing)+sequence`` over a declared order (the io.append_returning
 contract); gift codes derive from a seed, never ``rand()``.
 
-Scale note: this facade is the REQUEST-shaped surface — per-write
-driver-side max-id lookups and single-event pipeline runs, exactly the
-reference's per-request cost model.  Bulk ingestion goes through
+Scale note: this facade is the REQUEST-shaped surface — single-event
+pipeline runs over the reference's per-request cost model.  The state it
+writes itself stays on the driver: every row it appends, and every empty
+log it starts from, is a ``LocalRelation`` built from a pyarrow table, so
+Catalyst prunes empty decision/read logs out of the views and a write
+runs no Spark job.  Generated ids come from a driver-side high-water mark
+per ``(table, column)`` — one ``max()`` job the first time a table is
+used, none after.  Each table is its caller-supplied base frame plus ONE
+local relation holding every row appended so far, so plans do not grow
+with the number of writes (the appended rows must fit on the driver;
+caller-supplied tables are never collected).  Bulk ingestion goes through
 ``pipelines.redemption.process_redemptions`` / ``io.append_facts``
 unchanged; reads here are the same view definitions that back the declared
 analytic queries, so they scale with the views (dimension joins broadcast,
@@ -67,12 +75,17 @@ facts aggregate once per key).
 
 from __future__ import annotations
 
+import datetime
 from collections.abc import Sequence
 from decimal import Decimal
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BooleanType,
+    DataType,
+    DecimalType,
     LongType,
     StringType,
     StructField,
@@ -137,6 +150,30 @@ _LOG_SCHEMAS: dict[str, StructType] = {
 }
 
 
+# Spark -> Arrow for the column types of the tables above and of
+# REHIVE_SCHEMAS; timestamps travel as UTC instants (see ``_arrow_value``)
+_ARROW_TYPES: dict[type, pa.DataType] = {
+    LongType: pa.int64(),
+    StringType: pa.string(),
+    BooleanType: pa.bool_(),
+    TimestampType: pa.timestamp("us", tz="UTC"),
+}
+
+
+def _arrow_type(t: DataType) -> pa.DataType:
+    if isinstance(t, DecimalType):
+        return pa.decimal128(t.precision, t.scale)
+    return _ARROW_TYPES[type(t)]
+
+
+def _arrow_value(v):
+    """A naive ``datetime`` means process-local time, as it does for
+    ``createDataFrame(list)``; pin it to its UTC instant."""
+    if isinstance(v, datetime.datetime) and v.tzinfo is None:
+        return v.astimezone(datetime.timezone.utc)
+    return v
+
+
 class ApiError(Exception):
     """Reference 4xx parity: ``status`` + the reference's message text."""
 
@@ -149,11 +186,16 @@ class ApiError(Exception):
 class RehiveAPI:
     """The reference's complete endpoint surface over event-sourced state.
 
-    ``tables``: the nine reference tables as DataFrames (missing ones
-    default to empty frames of the declared schema).  All state lives in
-    in-session DataFrames; writes append (unionByName) — production
-    deployments point the same logic at parquet fact tables via
-    ``io.append_facts`` / ``io.append_returning``.
+    ``tables``: the nine reference tables and four event logs as
+    DataFrames (missing ones default to empty driver-local frames of the
+    declared schema).  Writes append to a per-table driver-side log;
+    ``self.t[name]`` is the caller's frame ``unionByName`` one local
+    relation of that log, so it never runs a Spark job to write and its
+    plan stays the same size however many writes pile up.  Generated ids
+    continue a per-``(table, column)`` high-water mark seeded by one
+    ``max()`` on first use.  Production deployments point the same logic
+    at parquet fact tables via ``io.append_facts`` /
+    ``io.append_returning``.
     """
 
     def __init__(
@@ -165,14 +207,22 @@ class RehiveAPI:
         self.spark = spark
         self.as_of = as_of
         self.t: dict[str, DataFrame] = {}
-        for name, schema in REHIVE_SCHEMAS.items():
+        # caller-supplied frame per table (None: the table starts empty)
+        # and the rows appended since construction, in declared order
+        self._base: dict[str, DataFrame | None] = {}
+        self._log: dict[str, list[tuple]] = {}
+        # (table, column) -> largest id seen; seeded on first _next_id
+        self._hwm: dict[tuple[str, str], int] = {}
+        for name, schema in [*REHIVE_SCHEMAS.items(), *_LOG_SCHEMAS.items()]:
             if name == "redemption_events":
                 continue  # API-internal: redeem() builds events itself
-            self.t[name] = tables.get(
-                name, spark.createDataFrame([], schema)
+            self._base[name] = tables.get(name)
+            self._log[name] = []
+            self.t[name] = (
+                self._base[name]
+                if self._base[name] is not None
+                else self._local([], schema)
             )
-        for name, schema in _LOG_SCHEMAS.items():
-            self.t[name] = tables.get(name, spark.createDataFrame([], schema))
 
     @classmethod
     def from_fixtures(cls, spark: SparkSession, as_of: str | None = None) -> "RehiveAPI":
@@ -185,24 +235,77 @@ class RehiveAPI:
     # internals
     # ------------------------------------------------------------------
 
-    def _append(self, name: str, rows: DataFrame) -> None:
-        self.t[name] = self.t[name].unionByName(rows)
+    @staticmethod
+    def _schema(table: str) -> StructType:
+        return REHIVE_SCHEMAS.get(table) or _LOG_SCHEMAS[table]
+
+    def _local(self, rows: Sequence[tuple], schema: StructType) -> DataFrame:
+        """``rows`` as a driver-local frame: a pyarrow table becomes a
+        ``LocalRelation`` with its real size, which Catalyst can prune
+        when empty and collect without a Spark job (``createDataFrame``
+        of a list gives an unsized ``LogicalRDD`` instead)."""
+        table = pa.table(
+            {
+                f.name: pa.array(
+                    [_arrow_value(r[i]) for r in rows], _arrow_type(f.dataType)
+                )
+                for i, f in enumerate(schema.fields)
+            }
+        )
+        return self.spark.createDataFrame(table, schema)
+
+    def _pin(self, df: DataFrame) -> DataFrame:
+        """Run ``df`` once and keep its rows on the driver: collecting the
+        result again runs no job, and no executor holds its blocks."""
+        return self._local(df.collect(), df.schema)
+
+    def _append(self, name: str, rows: Sequence[tuple]) -> None:
+        """Add ``rows`` (declared column order) to ``name``'s log, move
+        its high-water marks past them, and rebuild ``self.t[name]`` as
+        base ∪ one local relation of the whole log."""
+        schema = self._schema(name)
+        self._log[name] += [tuple(r) for r in rows]
+        for (table, col), mark in self._hwm.items():
+            if table == name:
+                i = schema.fieldNames().index(col)
+                self._hwm[table, col] = max(
+                    [mark, *(r[i] for r in rows if r[i] is not None)]
+                )
+        log = self._local(self._log[name], schema)
+        base = self._base[name]
+        self.t[name] = log if base is None else base.unionByName(log)
 
     def _next_id(self, name: str, id_col: str = "id") -> int:
         """max(id)+1 — the single-row RETURNING lookup (io.append_returning
-        contract; one scalar job per request-shaped write)."""
-        cur = self.t[name].agg(F.max(id_col)).collect()[0][0]
-        return int(cur or 0) + 1
+        contract).  The max comes from the high-water mark; seeding it
+        aggregates the caller's frame once (no job for a table that
+        started empty)."""
+        key = (name, id_col)
+        if key not in self._hwm:
+            i = self._schema(name).fieldNames().index(id_col)
+            seen = [r[i] for r in self._log[name]]
+            if self._base[name] is not None:
+                seen.append(self._base[name].agg(F.max(id_col)).collect()[0][0])
+            self._hwm[key] = max((v for v in seen if v is not None), default=0)
+        return self._hwm[key] + 1
 
-    def _row(self, table: str, **values) -> DataFrame:
-        """One literal row in ``table``'s declared schema (unset nullable
-        fields → NULL)."""
-        schema = REHIVE_SCHEMAS.get(table) or _LOG_SCHEMAS[table]
-        data = [tuple(values.get(f.name) for f in schema.fields)]
-        return self.spark.createDataFrame(data, schema)
+    def _row(self, table: str, **values) -> tuple:
+        """One literal row in ``table``'s declared column order (unset
+        nullable fields → NULL)."""
+        return tuple(values.get(f.name) for f in self._schema(table).fields)
+
+    def _write(self, table: str, **values) -> list[tuple]:
+        """Append one literal row; returns it (the RETURNING row)."""
+        row = [self._row(table, **values)]
+        self._append(table, row)
+        return row
 
     def _first(self, df: DataFrame):
-        rows = df.limit(1).collect()
+        """The first row of a key lookup, or None.  Every caller filters
+        to at most a few rows, so the frame is collected whole: a
+        ``limit(1)`` would scan partitions one batch at a time and start a
+        second job whenever the row is not in the first partition."""
+        rows = df.collect()
         return rows[0] if rows else None
 
     # ------------------------------------------------------------------
@@ -449,7 +552,8 @@ class RehiveAPI:
         Serial (long) pks auto-assign ``max(existing)+1``; the uuid-pk
         ``users`` table requires a caller-supplied ``id`` — the engine
         never draws random uuids on a hash-checked path (F15), exactly as
-        fixtures pre-generate them.  A supplied ``id`` always wins."""
+        fixtures pre-generate them.  A supplied ``id`` always wins, and
+        later auto-assigned ids continue past it."""
         if table not in REHIVE_SCHEMAS or table == "redemption_events":
             raise ApiError(400, f"Cannot insert into {table!r}")
         vals = dict(values)
@@ -463,9 +567,7 @@ class RehiveAPI:
                     f"{table!r} has a non-serial pk: supply an explicit id "
                     "(F15 — ids come from data, never rand/uuid)",
                 )
-        row = self._row(table, **vals)
-        self._append(table, row)
-        return row
+        return self._local(self._write(table, **vals), self._schema(table))
 
     def sql(self, query: str) -> DataFrame:
         """Raw-SQL escape hatch (F17): every table's CURRENT view is
@@ -487,9 +589,11 @@ class RehiveAPI:
         # materialize the derived-view row ONCE: the existence probe and
         # the caller's collect would otherwise each run the full
         # users_current plan (round-5 review)
-        out = self._with_package(
-            self.users_current().where(F.col("id") == F.lit(user_id))
-        ).limit(1).localCheckpoint(eager=True)
+        out = self._pin(
+            self._with_package(
+                self.users_current().where(F.col("id") == F.lit(user_id))
+            )
+        ).limit(1)
         if self._first(out) is None:
             raise ApiError(404, "User not found")
         return out
@@ -551,12 +655,9 @@ class RehiveAPI:
         """GET /api/subscription/status?userId= (:582-610): the derived
         {status, expires_at, last_payment} projection (P7/F11 vs as_of)."""
         # single execution for probe + result (round-5 review)
-        u = (
-            self.users_current()
-            .where(F.col("id") == F.lit(user_id))
-            .limit(1)
-            .localCheckpoint(eager=True)
-        )
+        u = self._pin(
+            self.users_current().where(F.col("id") == F.lit(user_id))
+        ).limit(1)
         if self._first(u.select("id")) is None:
             raise ApiError(404, "User not found")
         return u.select(
@@ -612,21 +713,26 @@ class RehiveAPI:
         engine's seeded reformulation of generateGiftCode :198-205),
         insert-RETURNING."""
         new_id = self._next_id("gift_codes")
-        row = self._row(
-            "gift_codes",
-            id=new_id,
-            code="",  # assigned below from the seed
-            package_id=int(package_id),
-            created_by=user_id,
-            is_redeemed=False,
-            created_at=ts,
+        schema = self._schema("gift_codes")
+        rows = self._local(
+            [
+                self._row(
+                    "gift_codes",
+                    id=new_id,
+                    code="",  # assigned below from the seed
+                    package_id=int(package_id),
+                    created_by=user_id,
+                    is_redeemed=False,
+                    created_at=ts,
+                )
+            ],
+            schema,
         ).withColumn(
             "code",
             gift_code(F.concat_ws("|", F.lit(user_id), F.lit(new_id), F.col("created_at"))),
-        )
-        row = row.localCheckpoint(eager=True)  # pin the generated row
-        self._append("gift_codes", row)
-        return row
+        ).collect()  # the generated code, computed once on the driver
+        self._append("gift_codes", rows)
+        return self._local(rows, schema)
 
     def redeem_gift_code(
         self, code: str, user_id: str, ts, referral_code: str | None = None
@@ -635,7 +741,7 @@ class RehiveAPI:
         pipeline on one event against current state.  Raises the
         reference's 404 (invalid/redeemed code) / 400 (self-redemption)."""
         event_id = self._next_id("redemptions_accepted", "event_id")
-        event = self.spark.createDataFrame(
+        event = self._local(
             [(event_id, code, user_id, referral_code, ts)],
             REHIVE_SCHEMAS["redemption_events"],
         )
@@ -663,30 +769,24 @@ class RehiveAPI:
             gc = self._first(
                 self.gift_codes_current().where(F.col("code") == F.lit(code))
             )
-            self._append(
-                "redemptions_accepted",
-                self._row(
-                    "redemptions_accepted",
-                    event_id=event_id,
-                    gift_code_id=gc["id"],
-                    code=code,
-                    user_id=user_id,
-                    package_id=gc["package_id"],
-                    event_ts=ts,
-                ),
-            )
-            return {"message": "Gift code redeemed successfully"}
-        self._append(
-            "redemptions_accepted",
-            self._row(
+            self._write(
                 "redemptions_accepted",
                 event_id=event_id,
-                gift_code_id=accepted["gift_code_id"],
+                gift_code_id=gc["id"],
                 code=code,
                 user_id=user_id,
-                package_id=accepted["package_id"],
+                package_id=gc["package_id"],
                 event_ts=ts,
-            ),
+            )
+            return {"message": "Gift code redeemed successfully"}
+        self._write(
+            "redemptions_accepted",
+            event_id=event_id,
+            gift_code_id=accepted["gift_code_id"],
+            code=code,
+            user_id=user_id,
+            package_id=accepted["package_id"],
+            event_ts=ts,
         )
         # referral edge (:494-497).  Parity note: the engine keeps AT MOST
         # ONE inbound edge per user (the pipeline's pinned deterministic
@@ -737,10 +837,11 @@ class RehiveAPI:
 
     def _seq_append(
         self, table: str, rows: DataFrame, base: int, order, order_source=None
-    ) -> DataFrame:
+    ) -> None:
         """Append ``rows`` with ids base+1.. over a declared order (the
         append_returning id rule); single-event batches are tiny, so the
-        single-window path applies.  Returns the appended frame."""
+        single-window path applies and the rows are collected before the
+        state changes."""
         from r_e_hive__spark.io import sequence_ids
 
         src = order_source if order_source is not None else rows
@@ -758,9 +859,8 @@ class RehiveAPI:
                 .alias(f.name)
                 for f in schema.fields
             ]
-        ).localCheckpoint(eager=True)  # pin before state mutation
-        self._append(table, aligned)
-        return aligned
+        )
+        self._append(table, aligned.collect())
 
     def request_withdrawal(
         self,
@@ -782,7 +882,7 @@ class RehiveAPI:
             raise ApiError(404, "User not found")
         if u["commission_balance"] < Decimal(str(amount)):
             raise ApiError(400, "Insufficient commission balance")
-        row = self._row(
+        row = self._write(
             "commission_withdrawals",
             id=self._next_id("commission_withdrawals"),
             user_id=user_id,
@@ -792,8 +892,7 @@ class RehiveAPI:
             payment_details=payment_details,
             created_at=ts,
         )
-        self._append("commission_withdrawals", row)
-        return row
+        return self._local(row, self._schema("commission_withdrawals"))
 
     def process_withdrawal(
         self, withdrawal_id: int, status: str, ts, admin_notes: str | None = None
@@ -808,16 +907,13 @@ class RehiveAPI:
         )
         if w is None:
             raise ApiError(404, "Withdrawal not found")
-        self._append(
+        self._write(
             "withdrawal_decisions",
-            self._row(
-                "withdrawal_decisions",
-                withdrawal_id=int(withdrawal_id),
-                status=status,
-                admin_notes=admin_notes,
-                processed_at=ts,
-                seq=self._next_id("withdrawal_decisions", "seq"),
-            ),
+            withdrawal_id=int(withdrawal_id),
+            status=status,
+            admin_notes=admin_notes,
+            processed_at=ts,
+            seq=self._next_id("withdrawal_decisions", "seq"),
         )
         # message parity with the JS template literal (:742): the raw
         # canonical 2-dp amount, no thousands separators
@@ -835,7 +931,7 @@ class RehiveAPI:
     def pay_subscription(self, user_id: str, ts, proof_url: str | None = None) -> DataFrame:
         """POST /api/subscription/pay (:612-640): $50.00 pending payment +
         submission notification, insert-RETURNING."""
-        row = self._row(
+        row = self._write(
             "subscription_payments",
             id=self._next_id("subscription_payments"),
             user_id=user_id,
@@ -844,7 +940,6 @@ class RehiveAPI:
             status="pending",
             created_at=ts,
         )
-        self._append("subscription_payments", row)
         self._notify(
             user_id,
             title_expr=F.lit("Subscription Payment Submitted"),
@@ -854,7 +949,7 @@ class RehiveAPI:
             type_="payment",
             ts=ts,
         )
-        return row
+        return self._local(row, self._schema("subscription_payments"))
 
     def approve_subscription_payment(self, payment_id: int, ts) -> dict:
         """PATCH /api/admin/subscription-payments/:id/approve (:767-809):
@@ -884,16 +979,13 @@ class RehiveAPI:
         )
         if p is None:
             raise ApiError(404, "Payment not found")
-        self._append(
+        self._write(
             "payment_decisions",
-            self._row(
-                "payment_decisions",
-                payment_id=int(payment_id),
-                status=status,
-                admin_notes=notes,
-                processed_at=ts,
-                seq=self._next_id("payment_decisions", "seq"),
-            ),
+            payment_id=int(payment_id),
+            status=status,
+            admin_notes=notes,
+            processed_at=ts,
+            seq=self._next_id("payment_decisions", "seq"),
         )
         self._notify(p["user_id"], F.lit(title), F.lit(msg), typ, ts)
         return {"message": f"Subscription payment {status}"}
@@ -904,16 +996,13 @@ class RehiveAPI:
         """POST /api/admin/add-commission (:846-878): append a ledger row;
         balance is the view."""
         amt = Decimal(str(amount)).quantize(Decimal("0.01"))
-        self._append(
+        self._write(
             "commissions",
-            self._row(
-                "commissions",
-                id=self._next_id("commissions"),
-                user_id=user_id,
-                amount=amt,
-                type=type_,
-                created_at=ts,
-            ),
+            id=self._next_id("commissions"),
+            user_id=user_id,
+            amount=amt,
+            type=type_,
+            created_at=ts,
         )
         # :869 template literal parity: the RAW request amount (the ledger
         # row carries the quantized decimal, the message shows what the
@@ -934,20 +1023,18 @@ class RehiveAPI:
     def mark_notification_read(self, notification_id: int, ts) -> dict:
         """PATCH /api/notifications/:id/read (:677-689): a read event; the
         flag is a view."""
-        self._append(
+        self._write(
             "notification_reads",
-            self._row(
-                "notification_reads",
-                notification_id=int(notification_id),
-                read_at=ts,
-            ),
+            notification_id=int(notification_id),
+            read_at=ts,
         )
         return {"message": "Notification marked as read"}
 
     def _notify(self, user_id, title_expr, message_expr, type_, ts) -> None:
         """Append one notification row (the reference's synchronous fan-out
-        insert, :234-239 et al.)."""
-        row = (
+        insert, :234-239 et al.).  The title/message expressions fold
+        into the local relation, so evaluating them runs no Spark job."""
+        row = [
             self._row(
                 "notifications",
                 id=self._next_id("notifications"),
@@ -958,8 +1045,11 @@ class RehiveAPI:
                 is_read=False,
                 created_at=ts,
             )
+        ]
+        self._append(
+            "notifications",
+            self._local(row, self._schema("notifications"))
             .withColumn("title", title_expr)
             .withColumn("message", message_expr)
-            .localCheckpoint(eager=True)
+            .collect(),
         )
-        self._append("notifications", row)

@@ -14,7 +14,9 @@ identical, so nothing downstream changes.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +67,19 @@ def ensure_session_confs(spark: SparkSession) -> None:
     _confs_pinned.add(key)
 
 
+def remove_at_exit(path: str) -> None:
+    """Delete ``path`` — a file or a directory tree this process wrote —
+    when the interpreter exits."""
+
+    def _remove() -> None:
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        elif os.path.exists(path):
+            os.remove(path)
+
+    atexit.register(_remove)
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make ``r_e_hive__spark`` importable inside Python workers.
 
@@ -98,6 +113,7 @@ def _ship_package(spark: SparkSession) -> None:
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         zf.write(full, rel)
         os.replace(tmp, zip_path)
+    remove_at_exit(zip_path)
     try:
         sc.addPyFile(zip_path)
         sc._rehive_pyfiles_added = True

@@ -75,13 +75,15 @@ _BM25_DISK_INDEX: dict[tuple, str] = {}
 
 def _bm25_disk_index(spark, sf_dir: str) -> str:
     """Build (once per session × sf_dir) the save_postings layout and
-    return its path.  Dirs of other sessions are left on disk — they may
-    belong to a LIVE concurrent process; only the dict entries (stale
-    keys, unreachable forever) are evicted."""
+    return its path.  The dir is deleted when this interpreter exits; dirs
+    of other sessions are left on disk — they may belong to a LIVE
+    concurrent process; only the dict entries (stale keys, unreachable
+    forever) are evicted."""
     import hashlib
     import os
     import tempfile
 
+    from r_e_hive__spark.catalog import remove_at_exit
     from r_e_hive__spark.operators.ranking import save_postings
 
     sc = spark.sparkContext
@@ -99,6 +101,7 @@ def _bm25_disk_index(spark, sf_dir: str) -> str:
         save_postings(
             documents.select("doc_id", "text"), "text", "doc_id", path
         )
+        remove_at_exit(path)
         _BM25_DISK_INDEX[key] = path
     return path
 

@@ -537,3 +537,95 @@ def test_decision_sequence_property(spark):
         assert _balance(api, "u0001") == expect
 
     run()
+
+
+# ---------------------------------------------------------------------------
+# driver-local request state: local relations, id high-water marks
+# ---------------------------------------------------------------------------
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs (job group + statusTracker)."""
+    sc = spark.sparkContext
+    group = f"test-api-{id(fn)}"
+    sc.setJobGroup(group, "")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _plan_nodes(df) -> int:
+    def count(node):
+        kids = node.children()
+        return 1 + sum(count(kids.apply(i)) for i in range(kids.size()))
+
+    return count(df._jdf.queryExecution().analyzed())
+
+
+def test_insert_explicit_id_moves_high_water_mark(api):
+    """An explicit id raises the mark: the next generated id continues
+    past it, whether the mark was seeded before or after."""
+    note = dict(user_id="u0075", title="t", message="m", type="info",
+                is_read=False, created_at=TS)
+    assert api.insert("notifications", note).collect()[0]["id"] == 61
+    api.insert("notifications", {**note, "id": 500})
+    assert api.insert("notifications", note).collect()[0]["id"] == 501
+    api.insert("notifications", {**note, "id": 100})  # a lower id: mark stays
+    assert api.insert("notifications", note).collect()[0]["id"] == 502
+    # unseeded table: the first lookup sees the explicit row too
+    pay = dict(user_id="u0003", amount=Decimal("50.00"), status="pending",
+               created_at=TS)
+    api.insert("subscription_payments", {**pay, "id": 500})
+    assert api.insert("subscription_payments", pay).collect()[0]["id"] == 501
+
+
+def test_local_rows_keep_naive_timestamps_process_local(spark, api):
+    """A naive datetime means process-local time on the driver-local path,
+    exactly as it does for ``createDataFrame(list)``."""
+    import os
+    import time
+
+    schema = api._schema("notification_reads")
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        local = api._local([api._row("notification_reads",
+                                     notification_id=1, read_at=TS)], schema)
+        listed = spark.createDataFrame([(1, TS)], schema)
+        got = local.collect()[0]["read_at"]
+        assert got == listed.collect()[0]["read_at"] == TS
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
+def test_writes_run_no_job_and_keep_a_flat_plan(spark, api):
+    """Once a table's id mark is seeded, a write is driver-local (no Spark
+    job), and the write log stays ONE local relation: the plan has the
+    same size after 2 writes as after 20."""
+    def write():
+        api.add_commission("u0075", "1.00", "direct", TS)
+
+    write()  # seeds the commissions/notifications marks (one max() each)
+    assert _jobs(spark, write) == 0
+    after_2 = _plan_nodes(api.t["commissions"])
+    for _ in range(18):
+        write()
+    assert _plan_nodes(api.t["commissions"]) == after_2
+    assert _balance(api, "u0075") == Decimal("20.00")
+
+
+def test_empty_logs_prune_out_of_views(api_ro):
+    """With no decisions or reads, the empty log is a LocalRelation that
+    Catalyst prunes: no latest-decision Window, no read-event Join."""
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "Window" not in optimized(api_ro.withdrawals_current())
+    assert "Join" not in optimized(api_ro.notifications_current())
