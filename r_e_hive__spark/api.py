@@ -66,7 +66,17 @@ per ``(table, column)`` — one ``max()`` job the first time a table is
 used, none after.  Each table is its caller-supplied base frame plus ONE
 local relation holding every row appended so far, so plans do not grow
 with the number of writes (the appended rows must fit on the driver;
-caller-supplied tables are never collected).  Bulk ingestion goes through
+caller-supplied tables are never collected).  A caller-supplied table that
+reads no files and is not a local relation — a ``createDataFrame(list)``
+frame, whose every scan re-runs Python workers to unpickle its rows — is
+``cache()``d lazily at construction, exactly as ``catalog.load_table``
+caches small tables: the first request that reads it materializes it, and
+later requests scan it in memory.  File-backed tables keep their own scans
+(and pushed filters); frames the caller already cached are left as they
+are.  ``close()`` (or leaving a ``with`` block) unpersists exactly the
+frames the API cached.  Point reads filter every input of
+``users_current`` by the user key first, so a one-user request works over
+that user's rows, not the whole ledger.  Bulk ingestion goes through
 ``pipelines.redemption.process_redemptions`` / ``io.append_facts``
 unchanged; reads here are the same view definitions that back the declared
 analytic queries, so they scale with the views (dimension joins broadcast,
@@ -80,6 +90,7 @@ from collections.abc import Sequence
 from decimal import Decimal
 
 import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -196,6 +207,14 @@ class RehiveAPI:
     ``max()`` on first use.  Production deployments point the same logic
     at parquet fact tables via ``io.append_facts`` /
     ``io.append_returning``.
+
+    Caller frames that read no files, are not local relations and are not
+    cached yet are ``cache()``d here, lazily: the first action that reads
+    one materializes it, and it stays cached until :meth:`close` (also
+    called on leaving a ``with`` block).  ``close()`` unpersists only those
+    frames; the API stays usable afterwards, its reads just re-run the
+    caller's lineage.  While the API is open its cache also serves the
+    caller's own uses of the same frames.
     """
 
     def __init__(
@@ -213,16 +232,30 @@ class RehiveAPI:
         self._log: dict[str, list[tuple]] = {}
         # (table, column) -> largest id seen; seeded on first _next_id
         self._hwm: dict[tuple[str, str], int] = {}
+        # the caller frames this API cached; close() releases exactly these
+        self._cached: list[DataFrame] = []
         for name, schema in [*REHIVE_SCHEMAS.items(), *_LOG_SCHEMAS.items()]:
             if name == "redemption_events":
                 continue  # API-internal: redeem() builds events itself
-            self._base[name] = tables.get(name)
+            base = tables.get(name)
+            if base is not None and self._rescans_lineage(base):
+                self._cached.append(base.cache())
+            self._base[name] = base
             self._log[name] = []
-            self.t[name] = (
-                self._base[name]
-                if self._base[name] is not None
-                else self._local([], schema)
-            )
+            self.t[name] = base if base is not None else self._local([], schema)
+
+    def close(self) -> None:
+        """Unpersist the frames this API cached (and wait for their blocks
+        to go); frames the caller cached stay cached."""
+        for df in self._cached:
+            df.unpersist(blocking=True)
+        self._cached.clear()
+
+    def __enter__(self) -> "RehiveAPI":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
     @classmethod
     def from_fixtures(cls, spark: SparkSession, as_of: str | None = None) -> "RehiveAPI":
@@ -238,6 +271,18 @@ class RehiveAPI:
     @staticmethod
     def _schema(table: str) -> StructType:
         return REHIVE_SCHEMAS.get(table) or _LOG_SCHEMAS[table]
+
+    @staticmethod
+    def _rescans_lineage(df: DataFrame) -> bool:
+        """True for a frame that re-runs its whole lineage on every scan
+        and nothing caches yet: it reads no files (those keep their scans
+        and pushed filters) and is not a local relation (already on the
+        driver, and prunable when empty)."""
+        return (
+            df.storageLevel == StorageLevel.NONE
+            and not df.isLocal()
+            and not df.inputFiles()
+        )
 
     def _local(self, rows: Sequence[tuple], schema: StructType) -> DataFrame:
         """``rows`` as a driver-local frame: a pyarrow table becomes a
@@ -389,13 +434,24 @@ class RehiveAPI:
             .drop("_read_ev")
         )
 
-    def users_current(self) -> DataFrame:
+    def users_current(self, user_id: str | None = None) -> DataFrame:
         """users + every derived mutable field: commission_balance (Σ
         ledger − Σ approved withdrawals), package_id (latest accepted
         redemption wins), subscription status/expiry/last-payment (latest
-        approved subscription payment wins, +1 month — :779-795)."""
+        approved subscription payment wins, +1 month — :779-795).
+
+        ``user_id``: the point read.  Every input is filtered to that
+        user's rows before the view is built; each join and aggregate in
+        it is keyed by user, so the row is the one the full view holds,
+        and the key reaches every scan (a filter above the view would stop
+        at the balances' full outer join)."""
+        def mine(df: DataFrame, key: str = "user_id") -> DataFrame:
+            if user_id is None:
+                return df
+            return df.where(F.col(key) == F.lit(user_id))
+
         approvals = (
-            self.t["subscription_payments"]
+            mine(self.t["subscription_payments"])
             .select("id", "user_id")
             .join(
                 self.t["payment_decisions"].where(F.col("status") == "approved"),
@@ -409,7 +465,7 @@ class RehiveAPI:
             F.col("user_id").alias("_au"), F.col("processed_at").alias("_appr_at")
         )
         users = (
-            self.t["users"]
+            mine(self.t["users"], "id")
             .join(latest_appr, F.col("id") == F.col("_au"), "left")
             .withColumn(
                 "subscription_expires_at",
@@ -424,10 +480,10 @@ class RehiveAPI:
         )
         return views.users_current(
             users,
-            self.t["commissions"],
-            self.withdrawals_current(),
+            mine(self.t["commissions"]),
+            mine(self.withdrawals_current()),
             self.as_of,
-            accepted_redemptions=self.t["redemptions_accepted"].select(
+            accepted_redemptions=mine(self.t["redemptions_accepted"]).select(
                 "user_id", "package_id", "event_ts", "event_id"
             ),
         )
@@ -589,11 +645,7 @@ class RehiveAPI:
         # materialize the derived-view row ONCE: the existence probe and
         # the caller's collect would otherwise each run the full
         # users_current plan (round-5 review)
-        out = self._pin(
-            self._with_package(
-                self.users_current().where(F.col("id") == F.lit(user_id))
-            )
-        ).limit(1)
+        out = self._pin(self._with_package(self.users_current(user_id))).limit(1)
         if self._first(out) is None:
             raise ApiError(404, "User not found")
         return out
@@ -655,9 +707,7 @@ class RehiveAPI:
         """GET /api/subscription/status?userId= (:582-610): the derived
         {status, expires_at, last_payment} projection (P7/F11 vs as_of)."""
         # single execution for probe + result (round-5 review)
-        u = self._pin(
-            self.users_current().where(F.col("id") == F.lit(user_id))
-        ).limit(1)
+        u = self._pin(self.users_current(user_id)).limit(1)
         if self._first(u.select("id")) is None:
             raise ApiError(404, "User not found")
         return u.select(
@@ -873,11 +923,7 @@ class RehiveAPI:
         """POST /api/commission-withdrawals (:525-560): balance-sufficiency
         guard against the DERIVED balance, then insert-RETURNING a pending
         request.  400 on insufficient balance, 404 on unknown user."""
-        u = self._first(
-            self.users_current()
-            .where(F.col("id") == F.lit(user_id))
-            .select("commission_balance")
-        )
+        u = self._first(self.users_current(user_id).select("commission_balance"))
         if u is None:
             raise ApiError(404, "User not found")
         if u["commission_balance"] < Decimal(str(amount)):

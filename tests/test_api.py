@@ -22,15 +22,18 @@ TS = datetime.datetime(2024, 1, 22, 12, 0, 0)
 
 @pytest.fixture()
 def api(spark):
-    """Fresh facade per test — for tests that MUTATE state."""
-    return RehiveAPI.from_fixtures(spark)
+    """Fresh facade per test — for tests that MUTATE state.  Closed after
+    the test, so its table caches do not pile up over the session."""
+    with RehiveAPI.from_fixtures(spark) as api:
+        yield api
 
 
 @pytest.fixture(scope="module")
 def api_ro(spark):
     """One shared facade for read-only tests (construction is ~2 s of
     createDataFrame; reads never mutate self.t)."""
-    return RehiveAPI.from_fixtures(spark)
+    with RehiveAPI.from_fixtures(spark) as api:
+        yield api
 
 
 def _balance(api, uid):
@@ -100,15 +103,14 @@ def test_admin_lists_user_relation(api_ro):
 
 
 def test_create_gift_code_deterministic(spark):
-    a1 = RehiveAPI.from_fixtures(spark)
-    a2 = RehiveAPI.from_fixtures(spark)
-    c1 = a1.create_gift_code(2, "u0001", TS).collect()[0]
-    c2 = a2.create_gift_code(2, "u0001", TS).collect()[0]
-    assert c1["code"] == c2["code"]  # seeded, never rand() (F7)
-    assert len(c1["code"]) == 8 and c1["code"].isalnum()
-    assert c1["id"] == 12  # max(11) + 1, the RETURNING id rule
-    # visible through the read endpoint
-    assert a1.get_gift_codes("u0001").where("id = 12").count() == 1
+    with RehiveAPI.from_fixtures(spark) as a1, RehiveAPI.from_fixtures(spark) as a2:
+        c1 = a1.create_gift_code(2, "u0001", TS).collect()[0]
+        c2 = a2.create_gift_code(2, "u0001", TS).collect()[0]
+        assert c1["code"] == c2["code"]  # seeded, never rand() (F7)
+        assert len(c1["code"]) == 8 and c1["code"].isalnum()
+        assert c1["id"] == 12  # max(11) + 1, the RETURNING id rule
+        # visible through the read endpoint
+        assert a1.get_gift_codes("u0001").where("id = 12").count() == 1
 
 
 def test_redeem_guard_parity(api_ro):
@@ -312,9 +314,9 @@ def test_event_ids_resume_from_supplied_log(spark, api):
     continues event ids past its max (the max+sequence contract)."""
     api.redeem_gift_code("GCODE001", "u0002", TS)
     prior = {name: df for name, df in api.t.items()}
-    api2 = RehiveAPI(spark, prior, api.as_of)
-    api2.redeem_gift_code("GCODE002", "u0003", TS)
-    ids = [r["event_id"] for r in api2.t["redemptions_accepted"].collect()]
+    with RehiveAPI(spark, prior, api.as_of) as api2:
+        api2.redeem_gift_code("GCODE002", "u0003", TS)
+        ids = [r["event_id"] for r in api2.t["redemptions_accepted"].collect()]
     assert len(ids) == len(set(ids)) == 2
     assert max(ids) == 2
 
@@ -469,10 +471,18 @@ def test_commission_history_matches_duckdb(api_ro):
         ORDER BY created_at DESC, id DESC LIMIT 100
         """
     ).fetchdf()
+    # Spark gives None for a NULL, DuckDB's frame NaN: one null value on
+    # both sides, so every cell (nulls too) is compared as equal or not
     pd.testing.assert_frame_equal(
-        got.reset_index(drop=True), want[got.columns.tolist()].reset_index(drop=True),
+        _nulls_as_none(got),
+        _nulls_as_none(want[got.columns.tolist()]),
         check_dtype=False,
     )
+
+
+def _nulls_as_none(df):
+    df = df.reset_index(drop=True).astype(object)
+    return df.where(df.notna(), None)
 
 
 def test_balance_matches_duckdb(api_ro):
@@ -536,7 +546,10 @@ def test_decision_sequence_property(spark):
         expect = base - Decimal("2.00") if seq[-1] == "approved" else base
         assert _balance(api, "u0001") == expect
 
-    run()
+    try:
+        run()
+    finally:
+        api.close()
 
 
 # ---------------------------------------------------------------------------
@@ -629,3 +642,151 @@ def test_empty_logs_prune_out_of_views(api_ro):
 
     assert "Window" not in optimized(api_ro.withdrawals_current())
     assert "Join" not in optimized(api_ro.notifications_current())
+
+
+# ---------------------------------------------------------------------------
+# in-session caller tables: cached on first use, released on close()
+# ---------------------------------------------------------------------------
+
+
+def _leaves(plan) -> list:
+    """Leaf operators of an executed plan, through AQE's wrappers (query
+    stages, reused exchanges); an InMemoryTableScan is a leaf — the plan
+    that fills its cache is not a child of it."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _leaves(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _leaves(plan.plan())
+    kids = plan.children()
+    if kids.size() == 0:
+        return [plan]
+    return [leaf for i in range(kids.size()) for leaf in _leaves(kids.apply(i))]
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _cached_rdd_ids(spark) -> set:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_point_read_scans_cached_tables(spark, api):
+    """After one read, a get_user point read scans users,
+    commission_withdrawals and packages in memory: every leaf of its
+    executed plan is an InMemoryTableScan (or a driver-local relation),
+    none a Scan ExistingRDD that re-runs the caller's lineage."""
+    api.get_user("u0001")  # materializes the caches it touches
+    # u0001 has approved withdrawals: AQE cannot drop that side as empty
+    df = api._with_package(api.users_current("u0001"))
+    df.collect()
+    leaves = _leaves(df._jdf.queryExecution().executedPlan())
+    names = {leaf.nodeName() for leaf in leaves}
+    assert names <= {"InMemoryTableScan", "LocalTableScan"}, names
+    scanned = [
+        {a.name() for a in _seq(leaf.relation().output())}
+        for leaf in leaves
+        if leaf.nodeName() == "InMemoryTableScan"
+    ]
+    for table in ("users", "commission_withdrawals", "packages"):
+        assert api.t[table].is_cached
+    assert any({"referral_code", "kyc_status"} <= s for s in scanned)  # users
+    assert any({"payment_method", "amount"} <= s for s in scanned)  # withdrawals
+    assert any({"package_monthly_subscription_fee"} <= s for s in scanned)
+
+
+def test_file_backed_table_keeps_its_pushed_scan(spark, tmp_path):
+    """A parquet-backed caller table is not cached, and the point read's
+    user key reaches its scan as a pushed filter."""
+    from pyspark import StorageLevel
+
+    from r_e_hive__spark import fixtures
+
+    frames = fixtures.fixture_frames(spark)
+    path = str(tmp_path / "commissions")
+    frames["commissions"].write.parquet(path)
+    frames["commissions"] = spark.read.parquet(path)
+    with RehiveAPI(spark, frames, str(fixtures.AS_OF_DT)) as api:
+        assert api.t["commissions"].storageLevel == StorageLevel.NONE
+        assert api.t["users"].is_cached
+        df = api.users_current("u0001")
+        row = df.collect()[0]
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters: [IsNotNull(user_id), EqualTo(user_id,u0001)]" in plan
+    assert row["commission_balance"] == sum(
+        r["amount"] for r in frames["commissions"].where("user_id = 'u0001'").collect()
+    ) - sum(
+        r["amount"]
+        for r in frames["commission_withdrawals"]
+        .where("user_id = 'u0001' AND status = 'approved'")
+        .collect()
+    )
+
+
+def test_close_releases_only_the_api_caches(spark):
+    """close() unpersists exactly the frames the API cached: the cached
+    RDDs are those of before the API was built, and a frame the caller
+    cached itself stays cached."""
+    from r_e_hive__spark import fixtures
+
+    frames = fixtures.fixture_frames(spark)
+    mine = frames["packages"].cache()
+    mine.count()
+    before = _cached_rdd_ids(spark)
+    api = RehiveAPI(spark, frames, str(fixtures.AS_OF_DT))
+    try:
+        assert not any(df is mine for df in api._cached)
+        api.get_user("u0001")
+        assert _cached_rdd_ids(spark) > before
+    finally:
+        api.close()
+    try:
+        assert _cached_rdd_ids(spark) <= before
+        assert mine.is_cached and mine.storageLevel.useMemory
+        assert api.get_user("u0001").collect()[0]["package_name"] == "diamond"
+    finally:
+        mine.unpersist(blocking=True)
+
+
+def test_point_read_equals_the_full_view_row(api):
+    """users_current(user_id) filters every input by the key; the row is
+    the one the full view holds, for a user with commissions, approved and
+    pending withdrawals, a redemption and an approved subscription."""
+    from pyspark.sql import functions as F
+
+    api.redeem_gift_code("GCODE001", "u0002", TS)
+    w = api.request_withdrawal("u0001", "4.00", TS, payment_details="{}")
+    api.process_withdrawal(w.collect()[0]["id"], "approved", TS)
+    p = api.pay_subscription("u0002", TS).collect()[0]
+    api.approve_subscription_payment(p["id"], TS)
+    for uid in ("u0001", "u0002", "u0075"):
+        want = api.users_current().where(F.col("id") == uid).collect()
+        assert api.users_current(uid).collect() == want
+        assert len(want) == 1
+    assert api.users_current("ghost").collect() == []
+
+
+def test_point_read_key_is_a_literal(api):
+    """The user key travels as a literal, never as SQL text: an id with a
+    quote reads its own row and no other."""
+    uid = "o'brien' OR '1'='1"
+    api.insert(
+        "users",
+        dict(id=uid, email="o@b.c", full_name="O", referral_code="RO",
+             kyc_status="pending", created_at=TS,
+             commission_balance=Decimal("0.00"),
+             subscription_status="inactive"),
+    )
+    api.add_commission(uid, "3.50", "direct", TS)
+    u = api.get_user(uid).collect()
+    assert [r["id"] for r in u] == [uid]
+    assert u[0]["commission_balance"] == Decimal("3.50")
+    assert api.get_subscription_status(uid).collect()[0]["status"] == "expired"
+    w = api.request_withdrawal(uid, "3.50", TS).collect()[0]
+    assert w["user_id"] == uid
+    api.process_withdrawal(w["id"], "approved", TS)
+    with pytest.raises(ApiError) as e:
+        api.request_withdrawal(uid, "0.01", TS)
+    assert e.value.status == 400
+    assert api.get_user("u0001").collect()[0]["commission_balance"] > 0
