@@ -58,14 +58,17 @@ contract); gift codes derive from a seed, never ``rand()``.
 
 Scale note: this facade is the REQUEST-shaped surface — single-event
 pipeline runs over the reference's per-request cost model.  The state it
-writes itself stays on the driver: every row it appends, and every empty
-log it starts from, is a ``LocalRelation`` built from a pyarrow table, so
-Catalyst prunes empty decision/read logs out of the views and a write
-runs no Spark job.  Generated ids come from a driver-side high-water mark
-per ``(table, column)`` — one ``max()`` job the first time a table is
-used, none after.  Each table is its caller-supplied base frame plus ONE
-local relation holding every row appended so far, so plans do not grow
-with the number of writes (the appended rows must fit on the driver;
+writes itself stays on the driver, and a write is a Python append: it
+extends the table's driver-side log and moves its id high-water marks,
+with no Spark job and no JVM call.  Every appended row, and every empty
+log, reaches Spark as a ``LocalRelation`` built from a pyarrow table, so
+Catalyst prunes empty decision/read logs out of the views.  Generated ids
+come from a driver-side high-water mark per ``(table, column)`` — one
+``max()`` job the first time a table is used, none after.  Each table is
+its caller-supplied base frame plus ONE local relation holding every row
+appended so far, built on the first read after the table changes and kept
+until the next append to it, so plans do not grow with the number of
+writes (the appended rows must fit on the driver;
 caller-supplied tables are never collected).  A caller-supplied table that
 reads no files and is not a local relation — a ``createDataFrame(list)``
 frame, whose every scan re-runs Python workers to unpickle its rows — is
@@ -86,7 +89,7 @@ facts aggregate once per key).
 from __future__ import annotations
 
 import datetime
-from collections.abc import Sequence
+from collections.abc import Iterator, Mapping, Sequence
 from decimal import Decimal
 
 import pyarrow as pa
@@ -104,11 +107,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from r_e_hive__spark.functions.scalar import (
-    add_one_month,
-    capitalize,
-    gift_code,
-)
+from r_e_hive__spark.functions.scalar import add_one_month, gift_code
 from r_e_hive__spark.operators.relational import latest_record_wins
 from r_e_hive__spark.pipelines import views
 from r_e_hive__spark.pipelines.redemption import process_redemptions
@@ -194,19 +193,40 @@ class ApiError(Exception):
         self.message = message
 
 
+class _Tables(Mapping):
+    """``RehiveAPI.t``, read-only: each table's current frame, built by
+    :meth:`RehiveAPI._frame` on the first read after the table changes."""
+
+    def __init__(self, api: "RehiveAPI"):
+        self._api = api
+
+    def __getitem__(self, name: str) -> DataFrame:
+        return self._api._frame(name)
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._api._log)
+
+    def __len__(self) -> int:
+        return len(self._api._log)
+
+    def __contains__(self, name) -> bool:
+        return name in self._api._log
+
+
 class RehiveAPI:
     """The reference's complete endpoint surface over event-sourced state.
 
     ``tables``: the nine reference tables and four event logs as
     DataFrames (missing ones default to empty driver-local frames of the
-    declared schema).  Writes append to a per-table driver-side log;
+    declared schema).  A write is a Python append to a per-table
+    driver-side log: it runs no Spark job and makes no JVM call.
     ``self.t[name]`` is the caller's frame ``unionByName`` one local
-    relation of that log, so it never runs a Spark job to write and its
-    plan stays the same size however many writes pile up.  Generated ids
-    continue a per-``(table, column)`` high-water mark seeded by one
-    ``max()`` on first use.  Production deployments point the same logic
-    at parquet fact tables via ``io.append_facts`` /
-    ``io.append_returning``.
+    relation of that log, built on the first read after the table changes
+    and memoized until the next append to it, so its plan stays the same
+    size however many writes pile up.  Generated ids continue a
+    per-``(table, column)`` high-water mark seeded by one ``max()`` on
+    first use.  Production deployments point the same logic at parquet
+    fact tables via ``io.append_facts`` / ``io.append_returning``.
 
     Caller frames that read no files, are not local relations and are not
     cached yet are ``cache()``d here, lazily: the first action that reads
@@ -225,16 +245,19 @@ class RehiveAPI:
     ):
         self.spark = spark
         self.as_of = as_of
-        self.t: dict[str, DataFrame] = {}
+        self.t: Mapping[str, DataFrame] = _Tables(self)
         # caller-supplied frame per table (None: the table starts empty)
         # and the rows appended since construction, in declared order
         self._base: dict[str, DataFrame | None] = {}
         self._log: dict[str, list[tuple]] = {}
+        # self.t's memo: a table's frame, built on its first read after a
+        # change; an append drops that table's entry
+        self._frames: dict[str, DataFrame] = {}
         # (table, column) -> largest id seen; seeded on first _next_id
         self._hwm: dict[tuple[str, str], int] = {}
         # the caller frames this API cached; close() releases exactly these
         self._cached: list[DataFrame] = []
-        for name, schema in [*REHIVE_SCHEMAS.items(), *_LOG_SCHEMAS.items()]:
+        for name in [*REHIVE_SCHEMAS, *_LOG_SCHEMAS]:
             if name == "redemption_events":
                 continue  # API-internal: redeem() builds events itself
             base = tables.get(name)
@@ -242,7 +265,6 @@ class RehiveAPI:
                 self._cached.append(base.cache())
             self._base[name] = base
             self._log[name] = []
-            self.t[name] = base if base is not None else self._local([], schema)
 
     def close(self) -> None:
         """Unpersist the frames this API cached (and wait for their blocks
@@ -299,26 +321,46 @@ class RehiveAPI:
         )
         return self.spark.createDataFrame(table, schema)
 
-    def _pin(self, df: DataFrame) -> DataFrame:
-        """Run ``df`` once and keep its rows on the driver: collecting the
-        result again runs no job, and no executor holds its blocks."""
-        return self._local(df.collect(), df.schema)
+    def _point_read(self, df: DataFrame) -> DataFrame:
+        """Run a one-user read once and keep its row on the driver:
+        collecting the result again runs no job, and no executor holds its
+        blocks.  404 when the user does not exist."""
+        rows = df.collect()
+        if not rows:
+            raise ApiError(404, "User not found")
+        return self._local(rows[:1], df.schema)
 
     def _append(self, name: str, rows: Sequence[tuple]) -> None:
         """Add ``rows`` (declared column order) to ``name``'s log, move
-        its high-water marks past them, and rebuild ``self.t[name]`` as
-        base ∪ one local relation of the whole log."""
+        its high-water marks past them, and drop its memoized frame: the
+        next read of the table builds it again.  A naive ``datetime`` is
+        pinned to its UTC instant here, so a row's instant does not
+        depend on when the table is first read."""
         schema = self._schema(name)
-        self._log[name] += [tuple(r) for r in rows]
+        rows = [tuple(map(_arrow_value, r)) for r in rows]
+        self._log[name] += rows
         for (table, col), mark in self._hwm.items():
             if table == name:
                 i = schema.fieldNames().index(col)
                 self._hwm[table, col] = max(
                     [mark, *(r[i] for r in rows if r[i] is not None)]
                 )
-        log = self._local(self._log[name], schema)
-        base = self._base[name]
-        self.t[name] = log if base is None else base.unionByName(log)
+        self._frames.pop(name, None)
+
+    def _frame(self, name: str) -> DataFrame:
+        """``self.t[name]``: the caller's frame ∪ one local relation of the
+        log (either alone while the other is absent or empty), memoized
+        until the next append to ``name``."""
+        df = self._frames.get(name)
+        if df is None:
+            base, log = self._base[name], self._log[name]
+            df = base
+            if base is None or log:
+                df = self._local(log, self._schema(name))
+                if base is not None:
+                    df = base.unionByName(df)
+            self._frames[name] = df
+        return df
 
     def _next_id(self, name: str, id_col: str = "id") -> int:
         """max(id)+1 — the single-row RETURNING lookup (io.append_returning
@@ -642,13 +684,9 @@ class RehiveAPI:
     def get_user(self, user_id: str) -> DataFrame:
         """GET /api/users/me · /api/users/:id (:343-382): user + package
         relation load.  404 if absent."""
-        # materialize the derived-view row ONCE: the existence probe and
-        # the caller's collect would otherwise each run the full
-        # users_current plan (round-5 review)
-        out = self._pin(self._with_package(self.users_current(user_id))).limit(1)
-        if self._first(out) is None:
-            raise ApiError(404, "User not found")
-        return out
+        # one execution serves the existence probe and the caller's
+        # collect (round-5 review)
+        return self._point_read(self._with_package(self.users_current(user_id)))
 
     def get_user_referrals(self, user_id: str) -> DataFrame:
         """GET /api/users/:id/referrals (:384-401): 2-level relation load
@@ -707,10 +745,7 @@ class RehiveAPI:
         """GET /api/subscription/status?userId= (:582-610): the derived
         {status, expires_at, last_payment} projection (P7/F11 vs as_of)."""
         # single execution for probe + result (round-5 review)
-        u = self._pin(self.users_current(user_id)).limit(1)
-        if self._first(u.select("id")) is None:
-            raise ApiError(404, "User not found")
-        return u.select(
+        return self._point_read(self.users_current(user_id)).select(
             F.col("subscription_status").alias("status"),
             F.col("subscription_expires_at").alias("expires_at"),
             F.col("last_subscription_payment").alias("last_payment"),
@@ -961,14 +996,13 @@ class RehiveAPI:
             processed_at=ts,
             seq=self._next_id("withdrawal_decisions", "seq"),
         )
-        # message parity with the JS template literal (:742): the raw
-        # canonical 2-dp amount, no thousands separators
+        # title: the JS capitalize (:741); message parity with the JS
+        # template literal (:742): the raw canonical 2-dp amount, no
+        # thousands separators
         self._notify(
             w["user_id"],
-            title_expr=F.concat(F.lit("Withdrawal "), capitalize(F.lit(status))),
-            message_expr=F.lit(
-                f"Your withdrawal request for ${w['amount']} has been {status}"
-            ),
+            title="Withdrawal " + status[:1].upper() + status[1:],
+            message=f"Your withdrawal request for ${w['amount']} has been {status}",
             type_="withdrawal",
             ts=ts,
         )
@@ -988,10 +1022,8 @@ class RehiveAPI:
         )
         self._notify(
             user_id,
-            title_expr=F.lit("Subscription Payment Submitted"),
-            message_expr=F.lit(
-                "Your subscription payment has been submitted for review"
-            ),
+            title="Subscription Payment Submitted",
+            message="Your subscription payment has been submitted for review",
             type_="payment",
             ts=ts,
         )
@@ -1033,7 +1065,7 @@ class RehiveAPI:
             processed_at=ts,
             seq=self._next_id("payment_decisions", "seq"),
         )
-        self._notify(p["user_id"], F.lit(title), F.lit(msg), typ, ts)
+        self._notify(p["user_id"], title, msg, typ, ts)
         return {"message": f"Subscription payment {status}"}
 
     def add_commission(
@@ -1056,8 +1088,8 @@ class RehiveAPI:
         # trailing space survives an absent description as in JS
         self._notify(
             user_id,
-            title_expr=F.lit("Commission Added"),
-            message_expr=F.lit(
+            title="Commission Added",
+            message=(
                 f"${amount} {type_} commission has been added to your account. "
                 f"{description or ''}"
             ),
@@ -1076,26 +1108,16 @@ class RehiveAPI:
         )
         return {"message": "Notification marked as read"}
 
-    def _notify(self, user_id, title_expr, message_expr, type_, ts) -> None:
+    def _notify(self, user_id, title: str, message: str, type_, ts) -> None:
         """Append one notification row (the reference's synchronous fan-out
-        insert, :234-239 et al.).  The title/message expressions fold
-        into the local relation, so evaluating them runs no Spark job."""
-        row = [
-            self._row(
-                "notifications",
-                id=self._next_id("notifications"),
-                user_id=user_id,
-                title="",
-                message="",
-                type=type_,
-                is_read=False,
-                created_at=ts,
-            )
-        ]
-        self._append(
+        insert, :234-239 et al.)."""
+        self._write(
             "notifications",
-            self._local(row, self._schema("notifications"))
-            .withColumn("title", title_expr)
-            .withColumn("message", message_expr)
-            .collect(),
+            id=self._next_id("notifications"),
+            user_id=user_id,
+            title=title,
+            message=message,
+            type=type_,
+            is_read=False,
+            created_at=ts,
         )

@@ -198,6 +198,9 @@ def test_withdrawal_reject_does_not_debit(api):
         api.get_withdrawals("u0001").where(f"id={w['id']}").collect()[0]["status"]
         == "rejected"
     )
+    n = api.get_notifications("u0001", 1).collect()[0]
+    assert n["title"] == "Withdrawal Rejected"
+    assert n["message"] == "Your withdrawal request for $7.00 has been rejected"
 
 
 # ---------------------------------------------------------------------------
@@ -210,8 +213,15 @@ def test_subscription_flow(api):
     assert p["amount"] == Decimal("50.00") and p["status"] == "pending"  # :623
     n = api.get_notifications("u0003", 1).collect()[0]
     assert n["title"] == "Subscription Payment Submitted"
+    assert n["message"] == "Your subscription payment has been submitted for review"
 
     api.approve_subscription_payment(p["id"], TS)
+    n = api.get_notifications("u0003", 1).collect()[0]
+    assert n["title"] == "Subscription Activated"
+    assert n["message"] == (
+        "Your subscription payment has been approved "
+        "and your subscription is now active"
+    )
     st = api.get_subscription_status("u0003").collect()[0]
     assert st["status"] == "active"
     assert st["expires_at"] == TS + datetime.timedelta(days=31)  # +1 month (:786)
@@ -226,7 +236,16 @@ def test_subscription_flow(api):
         api.get_subscription_payments("u0004").collect()[0]["status"] == "rejected"
     )
     n2 = api.get_notifications("u0004", 1).collect()[0]
-    assert "bad proof" in n2["message"]
+    assert n2["title"] == "Subscription Payment Rejected"
+    assert n2["message"] == "Your subscription payment has been rejected. bad proof"
+    p3 = api.pay_subscription("u0005", TS).collect()[0]
+    api.reject_subscription_payment(p3["id"], TS)
+    n3 = api.get_notifications("u0005", 1).collect()[0]
+    assert n3["title"] == "Subscription Payment Rejected"
+    assert n3["message"] == (
+        "Your subscription payment has been rejected. "
+        "Please contact support for more information."
+    )
 
     with pytest.raises(ApiError) as e:
         api.approve_subscription_payment(9999, TS)
@@ -270,8 +289,8 @@ def test_add_commission_message_shows_raw_amount(api):
     ('12.3', not the quantized '12.30'); the ledger row stays exact."""
     api.add_commission("u0074", "12.3", "direct", TS)
     n = api.get_notifications("u0074").collect()[0]
-    assert n["message"].startswith("$12.3 direct")
-    assert not n["message"].startswith("$12.30")
+    # no description: the JS template keeps the space after "account."
+    assert n["message"] == "$12.3 direct commission has been added to your account. "
     assert _balance(api, "u0074") == Decimal("12.30")
 
 
@@ -642,6 +661,75 @@ def test_empty_logs_prune_out_of_views(api_ro):
 
     assert "Window" not in optimized(api_ro.withdrawals_current())
     assert "Join" not in optimized(api_ro.notifications_current())
+
+
+def test_writes_build_no_frame(api, monkeypatch):
+    """Once the id marks are seeded, a write is a Python append: it builds
+    no local relation and no union."""
+    from pyspark.sql import DataFrame
+
+    api.add_commission("u0075", "1.00", "direct", TS)  # seeds the marks
+
+    def refuse(*_a, **_k):
+        raise AssertionError("a write built a frame")
+
+    with monkeypatch.context() as m:
+        m.setattr(RehiveAPI, "_local", refuse)
+        m.setattr(DataFrame, "unionByName", refuse)
+        api.add_commission("u0075", "2.00", "direct", TS)
+        api.mark_notification_read(61, TS)
+    assert _balance(api, "u0075") == Decimal("3.00")
+    reads = api.t["notification_reads"].collect()
+    assert [r["notification_id"] for r in reads] == [61]
+
+
+def test_first_read_after_writes_builds_one_log_frame(api, monkeypatch):
+    """k writes, then reads: the first read builds ONE log frame holding
+    the base rows and the k new ones in append order; a second read with
+    no write between returns the same frame."""
+    base = api.t["commissions"].collect()
+    k = 5
+    for i in range(k):
+        api.add_commission("u0075", f"{i + 1}.00", "direct", TS)
+    built = []
+    local = api._local
+    monkeypatch.setattr(api, "_local", lambda *a: built.append(a) or local(*a))
+    first = api.t["commissions"]
+    assert api.t["commissions"] is first
+    assert len(built) == 1
+    rows = first.collect()
+    assert rows[: len(base)] == base
+    new = rows[len(base):]
+    top = max(r["id"] for r in base)
+    assert [r["id"] for r in new] == list(range(top + 1, top + 1 + k))
+    assert [r["amount"] for r in new] == [Decimal(f"{i + 1}.00") for i in range(k)]
+    assert len(built) == 1
+
+
+def test_naive_timestamp_instant_fixed_at_write(api):
+    """A naive datetime means process-local time when it is WRITTEN: a
+    table first read after the process time zone changed still holds the
+    instant of the write."""
+    import os
+    import time
+
+    old = os.environ.get("TZ")
+    try:
+        os.environ["TZ"] = "America/New_York"
+        time.tzset()
+        want = TS.astimezone(datetime.timezone.utc)
+        api.add_commission("u0075", "1.00", "direct", TS)
+        os.environ["TZ"] = "Asia/Tokyo"
+        time.tzset()
+        rows = api.t["commissions"].collect()
+        got = max(rows, key=lambda r: r["id"])["created_at"]
+        assert got.astimezone(datetime.timezone.utc) == want
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
 
 
 # ---------------------------------------------------------------------------
