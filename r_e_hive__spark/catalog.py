@@ -41,11 +41,12 @@ _REQUIRED_CONFS = {
     # cast semantics (error vs NULL) do not depend on which Spark the
     # driver ships — the engine is developed and tested under ANSI on
     "spark.sql.ansi.enabled": "true",
-    # the SQL-string twins (vector.py *_sql, text.tokens_sql/shingles_sql,
-    # ranking.tokenize_sql/_sql_str_lit) embed regexes and term literals
-    # that assume the parser's DEFAULT escape processing; a caller session
-    # with legacy escaping enabled would silently change tokenization /
-    # shingling semantics relative to the Column spec (ADVICE r11)
+    # the SQL renderers (vector.py *_sql, text.tokens_sql/shingles_sql,
+    # ranking.tokenize_sql, all literals via functions.str_lit_sql) embed
+    # regexes and term literals that assume the parser's DEFAULT escape
+    # processing; a caller session with legacy escaping enabled would
+    # silently change tokenization / shingling semantics relative to the
+    # Python regex constants they render (ADVICE r11)
     "spark.sql.parser.escapedStringLiterals": "false",
 }
 

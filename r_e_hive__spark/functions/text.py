@@ -12,6 +12,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from r_e_hive__spark.functions import str_lit_sql
+
 # Tiny per-language stopword marker sets for the n-gram/stopword language-ID
 # heuristic.  Real pipelines plug fastText/cld3 in via pandas_udf; the
 # heuristic keeps the operator testable without external models.
@@ -25,23 +27,35 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 
 
+# Whitespace tokenizer regex (Java ``\s``: ASCII whitespace only), the one
+# source for both tokens() and tokens_sql().
+WS_SPLIT = r"\s+"
+
+
 def tokens(text: Column) -> Column:
     """Whitespace tokenization."""
-    return F.split(text, r"\s+")
+    return F.split(text, WS_SPLIT)
 
 
 def tokens_sql(text: str) -> str:
-    """SQL-string twin of :func:`tokens` (round 11): same split, same
-    regex.  ``text`` is a SQL fragment (quoted column name), not a Column.
-    The *_sql twins exist to collapse py4j round-trips in plan-building
-    hot paths — see functions/vector.py's renderer block for the measured
-    rationale; value identity is pinned in tests/test_dedup.py."""
-    return f"split({text}, '\\\\s+')"
+    """:func:`tokens` as SQL text (round 11): same split, same regex.
+    ``text`` is a SQL fragment (a quoted column name), not a Column.  The
+    renderers collapse py4j round-trips in plan-building hot paths — see
+    functions/vector.py's renderer block for the measured rationale; value
+    identity with tokens() is pinned in tests/test_dedup.py."""
+    return f"split({text}, {str_lit_sql(WS_SPLIT)})"
 
 
 def shingles_sql(text: str, k: int = 3) -> str:
-    """SQL-string twin of :func:`shingles`: same let-binding
-    (``transform(array(tokens), ...)[0]``), same < k whole-doc fallback."""
+    """Word k-shingles as an array<string> (dedup building block, X2).
+
+    transform(sequence(0, n-k)) over the token array — JVM higher-order
+    functions, no UDF, no explode until the caller wants one; a document
+    with fewer than k tokens yields the whole document as its one shingle.
+    The token array is let-bound (``transform(array(tokens), ...)[0]``, the
+    ``bind_once`` shape) so the document is tokenized ONCE, not once per
+    shingle index — see ``bind_once`` for the interpreted-HOF
+    re-evaluation hazard this avoids (6.6× on the sf0.1 explode path)."""
     return (
         f"transform(array({tokens_sql(text)}), _tk -> "
         f"CASE WHEN size(_tk) >= {k} THEN "
@@ -223,10 +237,11 @@ def bind_once(value: Column, body) -> Column:
     enter whole-stage codegen, and each lambda invocation re-``eval``s any
     captured expression SUBTREE from scratch.  An expensive captured
     expression (a regex ``split``, a gram builder) therefore re-executes
-    once per array element — ``shingles``' old ``slice(tokens(text), …)``
-    re-tokenized the whole document per shingle index, turning a linear
-    scan into O(tokens²) regex work per document (measured: the x16 query
-    spent 449 s at sf0.1; let-bound it is ~10 s, values identical).  A
+    once per array element — the old shingle builder's
+    ``slice(tokens(text), …)`` re-tokenized the whole document per shingle
+    index, turning a linear scan into O(tokens²) regex work per document
+    (measured: the x16 query spent 449 s at sf0.1; let-bound it is ~10 s,
+    values identical).  A
     lambda VARIABLE, by contrast, is a ``NamedLambdaVariable`` holding the
     already-evaluated value — referencing it is O(1).
 
@@ -239,26 +254,6 @@ def bind_once(value: Column, body) -> Column:
     — which it does by construction, being the same expression tree.
     """
     return F.transform(F.array(value), body)[0]
-
-
-def shingles(text: Column, k: int = 3) -> Column:
-    """Word k-shingles as an array<string> (dedup building block, X2).
-
-    transform(sequence(0, n-k)) over the token array — JVM higher-order
-    functions, no UDF, no explode until the caller wants one.  The token
-    array is let-bound (``bind_once``) so the document is tokenized ONCE,
-    not once per shingle index — see ``bind_once`` for the interpreted-HOF
-    re-evaluation hazard this avoids (6.6× on the sf0.1 explode path).
-    """
-
-    def build(toks: Column) -> Column:
-        n = F.size(toks)
-        idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-        return F.when(n >= k, F.transform(
-            idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k))
-        )).otherwise(F.array(F.concat_ws(" ", toks)))
-
-    return bind_once(tokens(text), build)
 
 
 # --- Repetition signals (Gopher-style quality rules; SURVEY.md §2.11 X16) --
@@ -280,7 +275,7 @@ def shingles(text: Column, k: int = 3) -> Column:
 
 def word_ngrams(text: Column, n: int) -> Column:
     """Word n-grams as array<string>; [] when the document has < n tokens
-    (unlike :func:`shingles`, which falls back to the whole document —
+    (unlike :func:`shingles_sql`, which falls back to the whole document —
     repetition stats must not count a short doc as one big gram).  Token
     array let-bound (``bind_once``): one tokenization per document, not one
     per gram index."""

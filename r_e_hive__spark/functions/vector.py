@@ -2,16 +2,18 @@
 
 Two precision modes:
 
-- ``dot``/``cosine`` — plain double math via ``zip_with`` + ``aggregate``:
-  fastest, fully codegen'd, what production similarity search uses.
-- ``dot_exact``/``cosine_exact`` — elements are first rounded to decimal(12,6)
-  (float → double → decimal, the only cast chain that is bit-identical across
-  engines), then the dot product is an *exact* decimal sum, order-independent
-  and therefore hash-stable against the DuckDB oracle.  Used by the declared
-  correctness queries; ~2× slower than the double path.
+- ``dot_sql``/``cosine_sql`` — plain double math via ``zip_with`` +
+  ``aggregate``: fastest, what production similarity search uses.
+- exact — elements are first rounded to decimal(12,6) (float → double →
+  decimal, the only cast chain that is bit-identical across engines), then
+  the dot product is an *exact* sum, order-independent and therefore
+  hash-stable against the DuckDB oracle.  Used by the declared correctness
+  queries.  ``dot_exact``/``cosine_exact`` are the decimal reference; the
+  operators use the bit-identical, faster ``units_arr_sql``/``dot_units_sql``.
 
-All of these are built-in higher-order functions — JVM-side, no Python UDF,
-no data movement to the driver.
+The ``*_sql`` renderers return SQL text for ONE ``F.expr`` parse.  All of
+these are built-in higher-order functions — JVM-side, no Python UDF, no
+data movement to the driver.
 """
 
 from __future__ import annotations
@@ -19,15 +21,14 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from r_e_hive__spark.functions import fixedpoint as fp
-
 DEC = "decimal(12,6)"
 ACC = "decimal(38,12)"
 
 # Micro-units of the decimal(12,6) quantization: every element value is an
 # exact integer multiple of 1e-6 after _el(), so it carries losslessly as
 # ``value * 10^6`` in a BIGINT — the fixedpoint.py money discipline applied
-# to vectors (round 11; see dot_units for the equivalence argument).
+# to vectors (round 11; see the renderer block below for the
+# equivalence argument).
 UNIT_SCALE = 10**6
 
 
@@ -64,14 +65,23 @@ def cosine_exact(a: Column, b: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Integer-units formulation of the exact path (round-11 optimization).
+# SQL-string renderers: the definitions of the vector expressions the
+# operators build.  Each returns ONE parseable SQL fragment, so an operator
+# that knows its input column names builds a whole vector expression with a
+# single F.expr py4j round-trip instead of hundreds of Column-API calls
+# (measured: declared-query DataFrame *construction* was 0.4–2.3 s per
+# bench rep at ~0.85 ms per py4j round-trip — 30–60 % of several
+# sub-second benched rows).  ``a``/``b`` are SQL fragments (a quoted column
+# name from functions.ident_sql, or a nested renderer call), NOT Column
+# objects.
 #
-# dot_exact() above is the SPEC: per pair it multiplies decimal(12,6)
-# elements (BigDecimal allocation each) and folds a decimal(38,12)
-# accumulator through an interpreted higher-order aggregate — measured as
-# the dominant cost of every exact-decimal pair stage (x17's in-cluster
-# join, x3's scan, x4's verify).  The units formulation computes the SAME
-# rational number in plain BIGINT arithmetic and converts ONCE at the end:
+# Integer-units formulation of the exact path.  dot_exact() above is the
+# decimal REFERENCE: per pair it multiplies decimal(12,6) elements
+# (BigDecimal allocation each) and folds a decimal(38,12) accumulator
+# through an interpreted higher-order aggregate — measured as the dominant
+# cost of every exact-decimal pair stage (x17's in-cluster join, x3's scan,
+# x4's verify).  The units renderers compute the SAME rational number in
+# plain BIGINT arithmetic and convert ONCE at the end:
 #
 #   units(x)   = _el(x) * 10^6            (exact: _el(x) is a 6-dp decimal)
 #   dot units  = Σ units(a_i)·units(b_i)  (exact integer, scale 10^12)
@@ -84,7 +94,8 @@ def cosine_exact(a: Column, b: Column) -> Column:
 # equals the decimal sum's unscaled value by construction; NULL semantics
 # match (NULL element → NULL product → NULL sum, zip_with length padding →
 # NULL, empty array → 0).  Measured at sf0.1 (250k in-cluster pairs, dim
-# 64): 7.6 s → 2.5 s on the declared x17 query, outputs identical.
+# 64): 7.6 s → 2.5 s on the declared x17 query, outputs identical;
+# tests/test_vector_units.py pins the equivalence on adversarial inputs.
 #
 # Overflow bound (the loud-failure contract): |units| < 10^6·|x|, so a
 # dim-64 dot stays under the BIGINT ceiling while |x| ≤ ~379; unit-norm
@@ -94,62 +105,28 @@ def cosine_exact(a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def units_el(c: Column) -> Column:
-    """One element → exact micro-units (BIGINT) of its _el() quantization."""
-    return (_el(c) * UNIT_SCALE).cast("long")
-
-
-def units_arr(vec: Column) -> Column:
-    """array<float/double> → array<long> of exact micro-units (one decimal
-    cast per element per ROW — hoist this to a column so O(pairs) dots reuse
-    it; the transform is interpreted but linear)."""
-    return F.transform(vec, units_el)
-
-
-def units_lit(values) -> Column:
-    """Foldable literal unit-array for a Python float vector (frozen
-    centroids / planes).  Built as ONE parsed SQL expression — ~3 py4j
-    calls instead of ~200 per vector, which matters because declared
-    queries rebuild their plan every bench rep.  The value rides the same
-    cast chain as units_el (string → double parse is exact for repr()
-    round-trip strings), so literal and data-side quantization cannot
-    drift."""
-    return F.expr(units_lit_sql(values))
-
-
-# ---------------------------------------------------------------------------
-# SQL-string renderers (round 11).  The Column constructors above are the
-# SPEC; these emit the identical arithmetic as ONE parseable SQL fragment so
-# operators that know their input COLUMN NAMES can build a whole vector
-# expression with a single F.expr py4j round-trip instead of hundreds of
-# Column-API calls (measured: declared-query DataFrame *construction* was
-# 0.4–2.3 s per bench rep at ~0.85 ms per py4j round-trip on this VM —
-# 30–60 % of several sub-second benched rows).  Each renderer mirrors its
-# Column twin token for token (same casts, same literal forms, same lambda
-# shapes), and tests/test_vector_units.py pins value identity on adversarial
-# inputs.  ``a``/``b`` are SQL fragments (a quoted column name or a nested
-# renderer call), NOT Column objects.
-# ---------------------------------------------------------------------------
-
-
 def el_sql(x: str) -> str:
-    """SQL twin of _el(): float → double → decimal(12,6)."""
+    """_el() as SQL: float → double → decimal(12,6)."""
     return f"CAST(CAST({x} AS DOUBLE) AS {DEC})"
 
 
 def units_el_sql(x: str) -> str:
-    """SQL twin of units_el()."""
+    """One element → exact micro-units (BIGINT) of its _el() quantization."""
     return f"CAST({el_sql(x)} * {UNIT_SCALE} AS BIGINT)"
 
 
 def units_arr_sql(col: str) -> str:
-    """SQL twin of units_arr()."""
+    """array<float/double> → array<long> of exact micro-units (one decimal
+    cast per element per ROW — hoist this to a column so O(pairs) dots
+    reuse it; the transform is interpreted but linear)."""
     return f"transform({col}, _ux -> {units_el_sql('_ux')})"
 
 
 def units_lit_sql(values) -> str:
-    """SQL source of units_lit() — each element rides the exact chain
-    units_el applies to data ('repr' string → double parse is exact)."""
+    """Foldable literal unit array for a Python float vector (frozen
+    centroids / planes).  Each element rides the exact chain units_el_sql
+    applies to data ('repr' string → double parse is exact), so literal and
+    data-side quantization cannot drift."""
     els = ",".join(
         units_el_sql(f"CAST('{float(x)!r}' AS DOUBLE)") for x in values
     )
@@ -157,17 +134,18 @@ def units_lit_sql(values) -> str:
 
 
 def lit_vec_sql(values) -> str:
-    """Foldable literal array<double> (SQL twin of
-    ``F.array(*[F.lit(float(x)) for x in values])`` — CAST from the repr
-    string is exact, and the cast constant-folds to the same double)."""
+    """Foldable literal array<double> (CAST from the repr string is exact,
+    and the cast constant-folds to the same double as ``F.lit(float(x))``)."""
     els = ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in values)
     return f"array({els})"
 
 
 def dot_units_sql(ua: str, ub: str) -> str:
-    """SQL twin of dot_units(): BIGINT fold + one terminal decimal(38,12)
-    conversion (decimal_of_units(s, 12) inlined: CAST to decimal(25,0)
-    times the 1e-12 decimal(12,12) literal — no division)."""
+    """Exact decimal dot product from two unit arrays: BIGINT fold + ONE
+    terminal decimal(38,12) conversion (fixedpoint.decimal_of_units(s, 12)
+    inlined: CAST to decimal(25,0) times the 1e-12 decimal(12,12) literal —
+    no division).  Bit-identical to ``dot_exact`` on the vectors the unit
+    arrays came from."""
     s = (
         f"aggregate(zip_with({ua}, {ub}, (_dx, _dy) -> _dx * _dy), "
         f"CAST(0 AS BIGINT), (_da, _dv) -> _da + _dv)"
@@ -176,12 +154,12 @@ def dot_units_sql(ua: str, ub: str) -> str:
 
 
 def norm2_units_sql(ua: str) -> str:
-    """SQL twin of norm2_units()."""
+    """Exact decimal sum of squares from a unit array (see dot_units_sql)."""
     return dot_units_sql(ua, ua)
 
 
 def dot_sql(a: str, b: str) -> str:
-    """SQL twin of dot()."""
+    """Double-precision dot product (production fast path)."""
     return (
         f"aggregate(zip_with({a}, {b}, (_dx, _dy) -> "
         f"CAST(_dx AS DOUBLE) * CAST(_dy AS DOUBLE)), "
@@ -190,47 +168,12 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def norm_sql(a: str) -> str:
-    """SQL twin of norm()."""
+    """Double-precision Euclidean norm."""
     return f"SQRT({dot_sql(a, a)})"
 
 
 def cosine_sql(a: str, b: str) -> str:
-    """SQL twin of cosine(): NULL (not error/NaN) for zero vectors."""
+    """Double-precision cosine: NULL (not error/NaN) for zero vectors — see
+    cosine_exact."""
     den = f"({norm_sql(a)} * {norm_sql(b)})"
     return f"CASE WHEN {den} > 0 THEN ({dot_sql(a, b)} / {den}) END"
-
-
-def dot_units(ua: Column, ub: Column) -> Column:
-    """Exact decimal dot product from two unit arrays: BIGINT fold + ONE
-    terminal decimal conversion.  Returns decimal(38,12) — bit-identical to
-    ``dot_exact`` on the vectors the unit arrays came from."""
-    s = F.aggregate(
-        F.zip_with(ua, ub, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    return fp.decimal_of_units(s, 12)
-
-
-def norm2_units(ua: Column) -> Column:
-    """Exact decimal sum of squares from a unit array (see dot_units)."""
-    return dot_units(ua, ua)
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Double-precision dot product (production fast path)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """NULL (not error/NaN) for zero vectors — see cosine_exact."""
-    den = norm(a) * norm(b)
-    return F.when(den > 0, dot(a, b) / den)

@@ -30,12 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from r_e_hive__spark.functions.text import (
-    bind_once,
-    shingles,
-    shingles_sql,
-    tokens,
-)
+from r_e_hive__spark.functions import ident_sql
+from r_e_hive__spark.functions.text import bind_once, shingles_sql, tokens
 from r_e_hive__spark.operators import (
     SHINGLE_PANDAS_MIN_BYTES,
     ensure_parallelism,
@@ -66,6 +62,27 @@ def exact_dedup(
     return df.join(survivors, cond, "left_semi")
 
 
+def _shingles(text_col: str, k: int) -> Column:
+    """Word k-shingles of the named text column (functions.text.shingles_sql)."""
+    return F.expr(shingles_sql(ident_sql(text_col), k))
+
+
+def _shingle_structs(text_col: str, k: int) -> Column:
+    """array<struct<shingle, _n>>: each DISTINCT k-shingle of the named text
+    column paired with the doc's distinct-shingle count.  ONE let-bound
+    shingling evaluation per doc: the distinct-gram array binds once
+    (interpreted-HOF discipline, functions/text bind_once) and each element
+    pairs with the array's size.  Built as ONE parsed SQL expression (round
+    11, the vector.py *_sql discipline): the Column-API construction of this
+    tree was ~0.3 s of py4j round-trips per bench rep."""
+    return F.expr(
+        f"transform(array(array_distinct("
+        f"{shingles_sql(ident_sql(text_col), k)})), _arr -> "
+        f"transform(_arr, _s -> "
+        f"struct(_s AS shingle, size(_arr) AS _n)))[0]"
+    )
+
+
 def with_shingles(
     df: DataFrame, text_col: str, id_col: str, k: int = 3, strategy: str = "auto"
 ) -> DataFrame:
@@ -89,7 +106,7 @@ def with_shingles(
         raise ValueError(f"unknown strategy {strategy!r}")
     return ensure_parallelism(df).select(
         F.col(id_col),
-        F.explode(F.array_distinct(shingles(F.col(text_col), k))).alias("shingle"),
+        F.explode(F.array_distinct(_shingles(text_col, k))).alias("shingle"),
     )
 
 
@@ -116,7 +133,7 @@ def _exploded_shingles_pandas(
 ]) — Python's \s is Unicode-aware and would tokenize
     NBSP etc. differently — and re.split keeps leading AND trailing
     empty tokens just like Spark's split; the < k fallback emits the
-    whole-doc single shingle exactly like shingles().  Pinned against
+    whole-doc single shingle exactly like shingles_sql().  Pinned against
     the expr path on edge strings (incl. Unicode whitespace) in
     tests/test_dedup.py.
     """
@@ -249,23 +266,10 @@ def ngram_jaccard_pairs(
     elif shingle_strategy == "expr":
         src = ensure_parallelism(df)
         if carry_n:
-            # ONE let-bound shingling evaluation per doc: the distinct-gram
-            # array binds once (interpreted-HOF discipline, functions/text
-            # bind_once) and each element pairs with the array's size.
-            # Built as ONE parsed SQL expression (round 11, the vector.py
-            # *_sql discipline): the Column-API construction of this tree
-            # was ~0.3 s of py4j round-trips per bench rep; the rendered
-            # tree is the same expression (parity in tests/test_dedup.py).
-            shingle_structs = F.expr(
-                f"transform(array(array_distinct("
-                f"{shingles_sql(f'`{text_col}`', k)})), _arr -> "
-                f"transform(_arr, _s -> "
-                f"struct(_s AS shingle, size(_arr) AS _n)))[0]"
-            )
             exploded = src.select(
                 F.col(id_col).alias("_id"),
                 *[F.col(c).alias(f"_b_{c}") for c in block_cols],
-                F.explode(shingle_structs).alias("_sn"),
+                F.explode(_shingle_structs(text_col, k)).alias("_sn"),
             ).select(
                 "_id",
                 *[f"_b_{c}" for c in block_cols],
@@ -277,7 +281,7 @@ def ngram_jaccard_pairs(
                 F.col(id_col).alias("_id"),
                 *[F.col(c).alias(f"_b_{c}") for c in block_cols],
                 F.explode(
-                    F.array_distinct(shingles(F.col(text_col), k))
+                    F.array_distinct(_shingles(text_col, k))
                 ).alias("shingle"),
             )
             # per-doc shingle count is a NARROW projection of the source —
@@ -285,7 +289,7 @@ def ngram_jaccard_pairs(
             # shingling pass (Spark recomputes shared subplans per consumer)
             sizes = src.select(
                 F.col(id_col).alias("_id"),
-                F.size(F.array_distinct(shingles(F.col(text_col), k))).alias("_n"),
+                F.size(F.array_distinct(_shingles(text_col, k))).alias("_n"),
             )
             # one row per DOC, not per input row: duplicate ids would
             # otherwise duplicate every pair through the n_a/n_b joins
@@ -649,7 +653,7 @@ def minhash_lsh_pairs(
         df.join(cand_ids, F.col(id_col) == F.col("_sid"), "left_semi")
         .select(
             F.col(id_col).alias("_sid"),
-            F.array_distinct(shingles(F.col(text_col), k)).alias("_sset"),
+            F.array_distinct(_shingles(text_col, k)).alias("_sset"),
         )
         .localCheckpoint(eager=False)
     )
@@ -811,7 +815,7 @@ def contamination_hits(
     """
     sh = lambda df, alias: df.select(  # noqa: E731
         F.col(id_col).alias(alias),
-        F.explode(F.array_distinct(shingles(F.col(text_col), k))).alias("shingle"),
+        F.explode(F.array_distinct(_shingles(text_col, k))).alias("shingle"),
     )
     tsh = sh(train, "train_id")
     bsh = sh(bench, "bench_id")

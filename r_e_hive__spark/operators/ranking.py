@@ -41,6 +41,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from r_e_hive__spark.functions import ident_sql, str_lit_sql
 from r_e_hive__spark.operators import plan_fits_broadcast
 
 #: ASCII-whitespace split class — Java \s parity; see module docstring.
@@ -56,24 +57,14 @@ def tokenize(text) -> Column:
 
 
 def tokenize_sql(text: str) -> str:
-    """SQL-string twin of :func:`tokenize` (round 11, the vector.py *_sql
-    build discipline): ``text`` is a SQL fragment.  The doubled
-    backslashes survive the SQL string literal as the SAME Java regex
-    source TOKEN_SPLIT feeds the Column form; parity pinned in
-    tests/test_ranking.py."""
+    """:func:`tokenize` as SQL text (round 11, the vector.py *_sql build
+    discipline): ``text`` is a SQL fragment.  The pattern is TOKEN_SPLIT
+    rendered through ``str_lit_sql``, so the Column and SQL forms share one
+    regex source; parity pinned in tests/test_ranking.py."""
     return (
-        f"filter(split(lower({text}), '[ \\\\t\\\\n\\\\x0B\\\\f\\\\r]+'), "
+        f"filter(split(lower({text}), {str_lit_sql(TOKEN_SPLIT)}), "
         f"_t -> _t != '')"
     )
-
-
-def _sql_str_lit(s: str) -> str:
-    """Render a Python string as a SQL string literal that parses back to
-    the same value under the session's pinned escape semantics
-    (escapedStringLiterals=false): backslashes doubled first, then single
-    quotes doubled.  Value parity with the Column API on quote/backslash-
-    bearing terms is pinned in tests/test_ranking.py."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def tokenize_py(text: str) -> list[str]:
@@ -239,9 +230,9 @@ def bm25_search(
         # pinned in catalog._REQUIRED_CONFS) would otherwise rewrite
         # 'c:\temp' to 'c:<TAB>emp' and a trailing '\' would swallow the
         # closing quote — diverging from the tok.isin(*terms) Column spec
-        in_list = ",".join(_sql_str_lit(t) for t in terms)
+        in_list = ",".join(str_lit_sql(t) for t in terms)
         bound = F.expr(
-            f"transform(array({tokenize_sql(f'`{text_col}`')}), _tk -> "
+            f"transform(array({tokenize_sql(ident_sql(text_col))}), _tk -> "
             f"struct(size(_tk) AS doc_len, "
             f"filter(_tk, _tok -> _tok IN ({in_list})) AS m))[0]"
         )

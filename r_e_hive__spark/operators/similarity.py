@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from r_e_hive__spark.functions import ident_sql
 from r_e_hive__spark.functions import vector as V
 from r_e_hive__spark.operators import (
     BLAS_MIN_BYTES,
@@ -34,10 +35,6 @@ from r_e_hive__spark.operators import (
     ensure_parallelism,
     resolve_strategy,
 )
-
-
-def _paired_cosine(exact: bool, a: Column, b: Column) -> Column:
-    return V.cosine_exact(a, b) if exact else V.cosine(a, b)
 
 
 def _auto_strategy(
@@ -90,11 +87,11 @@ def _topk_side(
     """
     vec, n2 = f"_{tag}vec", f"_{tag}n2"
     if exact_decimal:
-        side_vec = V.units_arr_sql(_bq(vec_col))
-        side_n2 = f"CAST({V.norm2_units_sql(_bq(vec))} AS DOUBLE)"
+        side_vec = V.units_arr_sql(ident_sql(vec_col))
+        side_n2 = f"CAST({V.norm2_units_sql(ident_sql(vec))} AS DOUBLE)"
     else:
-        side_vec = _bq(vec_col)
-        side_n2 = f"CAST({V.dot_sql(_bq(vec), _bq(vec))} AS DOUBLE)"
+        side_vec = ident_sql(vec_col)
+        side_n2 = f"CAST({V.dot_sql(ident_sql(vec), ident_sql(vec))} AS DOUBLE)"
     keep = [F.col(id_col)] + ([F.col(bucket_col)] if bucket_col else [])
     return df.select(*keep, F.expr(side_vec).alias(vec)).select(
         "*", F.expr(side_n2).alias(n2)
@@ -155,14 +152,15 @@ def brute_force_topk(
     # work 3× (bit-identical: the norm is cast to double before the multiply
     # exactly as in cosine_exact).  The exact path additionally hoists the
     # decimal QUANTIZATION out of the pair loop (round 11): each side
-    # carries its micro-unit array (V.units_arr) so the O(pairs) dot is a
+    # carries its micro-unit array (V.units_arr_sql) so the O(pairs) dot is a
     # plain BIGINT fold with one terminal decimal conversion — bit-identical
     # to dot_exact (vector.py's equivalence note), ~3× on the sf0.1 x17/x3
     # pair stages, and the shuffled/broadcast row stays fixed-width.
     # Sides and the pair cosine are single parsed SQL expressions (round
     # 11): this constructor is also quantized_topk's shortlist stage, and
-    # its Column-API form was ~0.8 s of py4j per build.  Fragments mirror
-    # the Column spec exactly (tests/test_vector_units.py pins both modes).
+    # its Column-API form was ~0.8 s of py4j per build.  Both modes are
+    # pinned against the dot_exact reference and a pure-Python double fold
+    # in tests/test_vector_units.py.
     if exact_decimal:
         pair_dot = V.dot_units_sql("_qvec", "_cvec")
     else:
@@ -228,7 +226,7 @@ def ivf_topk(
         raise ValueError(f"unknown strategy {strategy!r}")
     # per-side norm hoist, same reasoning (and bit-identity) as
     # brute_force_topk; the exact path also carries micro-unit arrays so the
-    # probe-join dot is a BIGINT fold (round 11, see vector.dot_units)
+    # probe-join dot is a BIGINT fold (round 11, see vector.dot_units_sql)
     if exact_decimal:
         pair_dot = V.dot_units_sql("_qvec", "_cvec")
     else:
@@ -384,8 +382,9 @@ def train_kmeans(
         # whole-stage codegen) instead of a decimal(22,6) buffer — the same
         # value by integer exactness; converted back below via
         # Decimal(units)·10^-6, the identical rational the decimal sum held
+        quoted = ident_sql(vec_col)
         dims = [
-            F.sum(V.units_el(vec.getItem(i))).alias(f"_s{i}")
+            F.sum(F.expr(V.units_el_sql(f"{quoted}[{i}]"))).alias(f"_s{i}")
             for i in range(dim)
         ]
     else:
@@ -449,26 +448,14 @@ def train_kmeans(
     return centroids, it
 
 
-def _bq(name: str) -> str:
-    """Render a str column argument for the SQL-string builders with
-    ``F.col``'s semantics (ADVICE r11): dots separate nested-field path
-    segments (``s.embedding`` → ``` `s`.`embedding` ```, restoring the
-    pre-round-11 struct-field contract of the str-typed signatures), and
-    embedded backticks are doubled per segment (the Spark quoted-identifier
-    escape) so an unusual column name cannot break out of the identifier
-    and inject SQL fragments."""
-    return ".".join(
-        "`" + seg.replace("`", "``") + "`" for seg in name.split(".")
-    )
-
-
 def _scores_array_sql(
     vec_sql: str, per_centroid_dots: list[str], cdim: int
 ) -> str:
     """array<struct<score,idx>> SQL source from pre-rendered per-centroid
-    dot fragments, with the loud dimension guard attached to centroid 0
-    exactly as the Column spec attaches it (CASE WHEN assert_true(...) IS
-    NULL THEN dot END ≡ F.when(F.assert_true(...).isNull(), dot))."""
+    dot fragments, with the loud dimension guard attached to centroid 0:
+    CASE WHEN assert_true(...) IS NULL THEN dot END — assert_true returns
+    NULL on success, so the CASE always selects the dot, and a NULL vector
+    passes the guard."""
     # guard assembled by CONCATENATION, never str.format: vec_sql embeds a
     # user identifier, and a '{'/'}' in it would turn .format into a
     # KeyError/IndexError at build time (ADVICE r11)
@@ -486,118 +473,66 @@ def _scores_array_sql(
 
 
 def _centroid_scores_from_units(
-    vec: Column | str, units: Column | str, centroids: list[list[float]], cdim: int
+    vec: str, units: str, centroids: list[list[float]], cdim: int
 ) -> Column:
-    """Exact-mode score array from a PRECOMPUTED micro-unit array (round
-    11): per centroid the dot is a BIGINT fold against a foldable literal
-    unit array — bit-identical to dot_exact(vec, lit-array) because both
-    sides ride the same quantization chain (vector.units_lit).  ``vec`` is
-    only consulted by the loud dimension guard, so callers that already
-    materialized ``units`` as a column pay one unit build per row for ALL
-    k scores.
-
-    Pass COLUMN NAMES (str) for both and the whole k-centroid array is
-    built as ONE parsed SQL expression instead of ~30 py4j round-trips
-    per centroid (round 11 — plan-construction time was 30–60 % of the
-    sub-second benched similarity rows; value identity vs the Column spec
-    pinned in tests/test_vector_units.py)."""
-    if isinstance(vec, str) and isinstance(units, str):
-        u = _bq(units)
-        dots = [
-            f"CAST({V.dot_units_sql(u, V.units_lit_sql(c))} AS DOUBLE)"
-            for c in centroids
-        ]
-        return F.expr(_scores_array_sql(_bq(vec), dots, cdim))
-    elems = []
-    for j, c in enumerate(centroids):
-        dot = V.dot_units(units, V.units_lit(c)).cast("double")
-        if j == 0:
-            dot = F.when(
-                F.assert_true(
-                    vec.isNull() | (F.size(vec) == cdim),
-                    F.lit(f"embedding dimension != centroid dimension {cdim}"),
-                ).isNull(),
-                dot,
-            )
-        elems.append(F.struct(dot.alias("score"), F.lit(j).alias("idx")))
-    return F.array(*elems)
+    """Exact-mode score array from a PRECOMPUTED micro-unit array column
+    (round 11): per centroid the dot is a BIGINT fold against a foldable
+    literal unit array — bit-identical to dot_exact(vec, lit-array) because
+    both sides ride the same quantization chain (vector.units_lit_sql).
+    ``vec`` is only consulted by the loud dimension guard, so callers that
+    already materialized ``units`` pay one unit build per row for ALL k
+    scores."""
+    u = ident_sql(units)
+    dots = [
+        f"CAST({V.dot_units_sql(u, V.units_lit_sql(c))} AS DOUBLE)"
+        for c in centroids
+    ]
+    return F.expr(_scores_array_sql(ident_sql(vec), dots, cdim))
 
 
 def _centroid_scores(
-    vec: Column | str, centroids: list[list[float]], exact: bool = False
+    vec: str, centroids: list[list[float]], exact: bool = False
 ) -> Column:
-    """array<struct<score,idx>> of cos-proportional scores per centroid.
+    """array<struct<score,idx>> of cos-proportional scores per centroid of
+    the named vector column.
 
     Centroids are unit vectors, so dot(v, ĉ_j) ranks identically to
     cosine(v, c_j) (the ‖v‖ factor is constant across j).  All JVM-side:
-    k×dim literal arrays folded with zip_with/aggregate, one codegen stage,
-    no UDF.  ``exact`` routes through the decimal-exact dot in its
-    micro-unit formulation (oracle-stable ranking for declared queries,
-    bit-identical to the dot_exact spec — see vector.dot_units; the vector
-    quantizes ONCE per row via a bind_once let-binding instead of once per
-    centroid per element); the double path is the production one."""
+    k×dim literal arrays folded with zip_with/aggregate, no UDF, ONE parsed
+    SQL expression for all k scores (a Column-API k-centroid loop cost
+    ~0.8 s of every declared-query build).  ``exact`` routes through the
+    micro-unit dot (oracle-stable ranking for declared queries,
+    bit-identical to dot_exact; the vector quantizes ONCE per row via a
+    let-binding); the double path is the production one.  zip_with
+    null-pads a wrong-length vector into all-NULL scores (an arbitrary
+    bucket), so centroid 0 carries the loud dimension guard."""
     dims = {len(c) for c in centroids}
     if len(dims) != 1:
         raise ValueError(f"centroids have inconsistent dimensions: {sorted(dims)}")
     (cdim,) = dims
-    if isinstance(vec, str):
-        # ONE parsed SQL expression for all k scores (round 11): the
-        # Column constructions below are the spec; at ~0.85 ms per py4j
-        # round-trip the k-centroid loop alone cost ~0.8 s of every
-        # declared-query build.  Value identity pinned in
-        # tests/test_vector_units.py.
-        v = _bq(vec)
-        if exact:
-            # same let-binding shape as bind_once(units_arr(vec), ...):
-            # transform(array(value), u -> body)[0] quantizes ONCE per row
-            dots = [
-                f"CAST({V.dot_units_sql('_cu', V.units_lit_sql(c))} AS DOUBLE)"
-                for c in centroids
-            ]
-            body = _scores_array_sql(v, dots, cdim)
-            return F.expr(
-                f"transform(array({V.units_arr_sql(v)}), _cu -> {body})[0]"
-            )
+    v = ident_sql(vec)
+    if exact:
+        # let-binding shape of functions.text.bind_once:
+        # transform(array(value), u -> body)[0] quantizes ONCE per row
         dots = [
-            f"aggregate(zip_with({v}, {V.lit_vec_sql(c)}, "
-            f"(_dx, _dy) -> CAST(_dx AS DOUBLE) * _dy), "
-            f"CAST(0 AS DOUBLE), (_da, _dv) -> _da + _dv)"
+            f"CAST({V.dot_units_sql('_cu', V.units_lit_sql(c))} AS DOUBLE)"
             for c in centroids
         ]
-        return F.expr(_scores_array_sql(v, dots, cdim))
-    if exact:
-        from r_e_hive__spark.functions.text import bind_once
-
-        return bind_once(
-            V.units_arr(vec),
-            lambda u: _centroid_scores_from_units(vec, u, centroids, cdim),
+        body = _scores_array_sql(v, dots, cdim)
+        return F.expr(
+            f"transform(array({V.units_arr_sql(v)}), _cu -> {body})[0]"
         )
-    elems = []
-    for j, c in enumerate(centroids):
-        carr = F.array(*[F.lit(float(x)) for x in c])
-        dot = F.aggregate(
-            F.zip_with(vec, carr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        if j == 0:
-            # zip_with null-pads a wrong-length vector and every score would
-            # go NULL -> an arbitrary bucket.  Fail LOUDLY instead (the same
-            # hardening hyperplane_bucket got in round 3; round-4 review
-            # found the k-means path missing it).  Checked once per row.
-            dot = F.when(
-                F.assert_true(
-                    vec.isNull() | (F.size(vec) == cdim),
-                    F.lit(f"embedding dimension != centroid dimension {cdim}"),
-                ).isNull(),
-                dot,
-            )
-        elems.append(F.struct(dot.alias("score"), F.lit(j).alias("idx")))
-    return F.array(*elems)
+    dots = [
+        f"aggregate(zip_with({v}, {V.lit_vec_sql(c)}, "
+        f"(_dx, _dy) -> CAST(_dx AS DOUBLE) * _dy), "
+        f"CAST(0 AS DOUBLE), (_da, _dv) -> _da + _dv)"
+        for c in centroids
+    ]
+    return F.expr(_scores_array_sql(v, dots, cdim))
 
 
 def assign_centroid(
-    vec: Column | str, centroids: list[list[float]], exact: bool = False
+    vec: str, centroids: list[list[float]], exact: bool = False
 ) -> Column:
     """Nearest-centroid id (struct-max: ties break to the larger idx,
     consistently with probe_centroids' descending sort)."""
@@ -605,7 +540,7 @@ def assign_centroid(
 
 
 def probe_centroids(
-    vec: Column | str, centroids: list[list[float]], n_probe: int, exact: bool = False
+    vec: str, centroids: list[list[float]], n_probe: int, exact: bool = False
 ) -> Column:
     """The ``n_probe`` nearest centroid ids, best first."""
     ordered = F.sort_array(_centroid_scores(vec, centroids, exact), asc=False)
@@ -732,14 +667,15 @@ def ivf_search(
 
 
 def hyperplane_bucket(
-    vec: Column | str,
+    vec: str,
     dim: int = 64,
     n_planes: int = 16,
     planes: list[list[int]] | None = None,
     exact: bool = False,
-    units: Column | str | None = None,
+    units: str | None = None,
 ) -> Column:
-    """Deterministic random-hyperplane sign bucket for a vector.
+    """Deterministic random-hyperplane sign bucket for the named vector
+    column.
 
     Default direction: h_p component i = sin(p·1009 + i·9973) — a fixed,
     engine-portable pseudo-random direction (no rand(): determinism
@@ -750,9 +686,19 @@ def hyperplane_bucket(
     job).  With ``exact=True`` the projection is Σ decimal(v_i)·c_pi in
     exact decimal×integer arithmetic, so sign(<v,h_p>) is bit-reproducible
     in any engine that has exact decimals (the DuckDB oracle recomputes the
-    identical buckets — no float sign-boundary risk).
+    identical buckets — no float sign-boundary risk).  Only the SIGN
+    matters, and sign(Σ dec(12,6)·int) == sign(Σ units·int), so the fold
+    runs in BIGINT over the micro-unit array (``units``, a column the
+    caller materialized, else built here); |Σ| ≤ dim·10^6·max|x|·max|c|
+    overflows loudly under ANSI, far above any unit-norm corpus.
 
-    Bucket = integer whose bit p is sign(<v, h_p>)."""
+    Bucket = integer whose bit p is sign(<v, h_p>), built as ONE parsed SQL
+    expression (a Column-API loop of n_planes folds cost ~2-3 s of py4j per
+    x4 build).  A dimension guard wraps the let-bound vector: zip_with
+    null-pads a short vector, silently zeroing the projection where an
+    exact-SQL oracle's NULL-skipping sum could still set the bit (ADVICE
+    r3), so a wrong length fails loudly.  A NULL vector passes through
+    (NULL projection → bucket 0; exact verification filters such rows)."""
     if exact and planes is None:
         raise ValueError(
             "hyperplane_bucket: exact=True requires frozen integer planes "
@@ -765,136 +711,55 @@ def hyperplane_bucket(
                 f"hyperplane_bucket: need {n_planes} planes of dim {dim}, "
                 f"got {len(planes)} planes (wrong-length planes: {bad})"
             )
-    if isinstance(vec, str) and (units is None or isinstance(units, str)):
-        # One-parse SQL fast path (round 11, the vector.py *_sql build
-        # discipline): the Column loop below builds n_planes interpreted
-        # folds (~2-3 s of py4j per x4 build).  The rendered expression is
-        # the same arithmetic with the dimension guard let-bound ONCE
-        # (transform(array(guarded), _hb -> ...)[0]) instead of re-stated
-        # per plane — the guard either raises or passes the value through,
-        # so evaluating it once per row is value-identical.  Parity pinned
-        # in tests/test_similarity.py.
-        v = _bq(vec)
-        # guard assembled by concatenation, not str.format — v embeds a
-        # user identifier (ADVICE r11, same reasoning as _scores_array_sql)
-        guard_head = (
-            f"CASE WHEN assert_true((({v}) IS NULL) OR (size({v}) = {dim}), "
-            f"'hyperplane_bucket: vector dim != {dim}') IS NULL "
-            f"THEN "
-        )
-        bits = []
-        for p in range(n_planes):
-            if planes is not None and exact:
-                arr = "array(" + ",".join(f"{int(c)}L" for c in planes[p]) + ")"
-                proj = (
-                    f"aggregate(zip_with(_hb, {arr}, (_x, _s) -> _x * _s), "
-                    f"CAST(0 AS BIGINT), (_da, _dv) -> _da + _dv)"
-                )
-                zero_sql = "CAST(0 AS BIGINT)"
-            elif planes is not None:
-                arr = "array(" + ",".join(str(int(c)) for c in planes[p]) + ")"
-                proj = (
-                    f"aggregate(zip_with(_hb, {arr}, "
-                    f"(_x, _s) -> CAST(_x AS DOUBLE) * _s), "
-                    f"CAST(0 AS DOUBLE), (_da, _dv) -> _da + _dv)"
-                )
-                zero_sql = "CAST(0 AS DOUBLE)"
-            else:
-                arr = (
-                    "array("
-                    + ",".join(str(p * 1009 + i * 9973) for i in range(dim))
-                    + ")"
-                )
-                proj = (
-                    f"aggregate(zip_with(_hb, {arr}, "
-                    f"(_x, _s) -> CAST(_x AS DOUBLE) * SIN(_s)), "
-                    f"CAST(0 AS DOUBLE), (_da, _dv) -> _da + _dv)"
-                )
-                zero_sql = "CAST(0 AS DOUBLE)"
-            bits.append(
-                f"(CASE WHEN {proj} > {zero_sql} "
-                f"THEN CAST({2 ** p} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-            )
-        if exact:
-            src = _bq(units) if units is not None else V.units_arr_sql(v)
-        else:
-            src = v
-        bound = guard_head + src + " END"
-        return F.expr(
-            f"transform(array({bound}), _hb -> {' + '.join(bits)})[0]"
-        )
-    # Runtime dimension guard: zip_with null-pads a short vector, which
-    # would silently zero the whole projection (bit=0) while an exact-SQL
-    # oracle's NULL-skipping sum could still yield bit=1 — a latent
-    # cross-engine bucket divergence (ADVICE r3).  Fail loudly instead.
-    # A NULL vector is NOT a dimension error: it passes through (projection
-    # NULL → every bit 0 → bucket 0, the pre-guard behavior; downstream
-    # exact-similarity verification filters such rows).  assert_true
-    # returns NULL on success, so the WHEN always selects vec.
-    vec = F.when(
-        F.assert_true(
-            vec.isNull() | (F.size(vec) == dim),
-            f"hyperplane_bucket: vector dim != {dim}",
-        ).isNull(),
-        vec,
+    v = ident_sql(vec)
+    # guard assembled by concatenation, not str.format — v embeds a user
+    # identifier (ADVICE r11, same reasoning as _scores_array_sql)
+    guard_head = (
+        f"CASE WHEN assert_true((({v}) IS NULL) OR (size({v}) = {dim}), "
+        f"'hyperplane_bucket: vector dim != {dim}') IS NULL "
+        f"THEN "
     )
     bits = []
     for p in range(n_planes):
-        if planes is not None:
-            comps = F.array(*[F.lit(int(c)) for c in planes[p]])
-            if exact:
-                # round 11: the projection's SIGN is all that matters, and
-                # sign(Σ dec(12,6)·int) == sign(Σ units·int) — the exact
-                # decimal sum times 10^6.  Integer coefficients need no
-                # quantization, so the fold is pure BIGINT; ``units``
-                # (V.units_arr, materialized by the caller) replaces one
-                # decimal cast per element PER PLANE with one per element
-                # per row.  Bound: |Σ| ≤ dim·10^6·max|x|·max|c| — loud ANSI
-                # overflow far above any unit-norm corpus.
-                # the loud dimension guard must ride the branch that is
-                # actually evaluated: the exact path never touches the
-                # guarded ``vec`` wrapper below, so re-apply it to ``u``
-                # (NULL vec passes through exactly as before: NULL units →
-                # NULL proj → bit 0)
-                u_raw = units if units is not None else V.units_arr(vec)
-                u = F.when(
-                    F.assert_true(
-                        vec.isNull() | (F.size(vec) == dim),
-                        f"hyperplane_bucket: vector dim != {dim}",
-                    ).isNull(),
-                    u_raw,
-                )
-                comps_long = F.expr(
-                    "array(" + ",".join(f"{int(c)}L" for c in planes[p]) + ")"
-                )
-                proj = F.aggregate(
-                    F.zip_with(u, comps_long, lambda x, s: x * s),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                zero: Column = F.lit(0).cast("long")
-            else:
-                proj = F.aggregate(
-                    F.zip_with(vec, comps, lambda x, s: x.cast("double") * s),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                zero = F.lit(0.0)
-        else:
-            comps = F.array(*[F.lit(p * 1009 + i * 9973) for i in range(dim)])
-            proj = F.aggregate(
-                F.zip_with(vec, comps, lambda x, s: x.cast("double") * F.sin(s)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
+        if planes is not None and exact:
+            arr = "array(" + ",".join(f"{int(c)}L" for c in planes[p]) + ")"
+            proj = (
+                f"aggregate(zip_with(_hb, {arr}, (_x, _s) -> _x * _s), "
+                f"CAST(0 AS BIGINT), (_da, _dv) -> _da + _dv)"
             )
-            zero = F.lit(0.0)
+            zero_sql = "CAST(0 AS BIGINT)"
+        elif planes is not None:
+            arr = "array(" + ",".join(str(int(c)) for c in planes[p]) + ")"
+            proj = (
+                f"aggregate(zip_with(_hb, {arr}, "
+                f"(_x, _s) -> CAST(_x AS DOUBLE) * _s), "
+                f"CAST(0 AS DOUBLE), (_da, _dv) -> _da + _dv)"
+            )
+            zero_sql = "CAST(0 AS DOUBLE)"
+        else:
+            arr = (
+                "array("
+                + ",".join(str(p * 1009 + i * 9973) for i in range(dim))
+                + ")"
+            )
+            proj = (
+                f"aggregate(zip_with(_hb, {arr}, "
+                f"(_x, _s) -> CAST(_x AS DOUBLE) * SIN(_s)), "
+                f"CAST(0 AS DOUBLE), (_da, _dv) -> _da + _dv)"
+            )
+            zero_sql = "CAST(0 AS DOUBLE)"
         bits.append(
-            F.when(proj > zero, F.lit(2 ** p).cast("long")).otherwise(F.lit(0).cast("long"))
+            f"(CASE WHEN {proj} > {zero_sql} "
+            f"THEN CAST({2 ** p} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
         )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+    if exact:
+        src = ident_sql(units) if units is not None else V.units_arr_sql(v)
+    else:
+        src = v
+    bound = guard_head + src + " END"
+    return F.expr(
+        f"transform(array({bound}), _hb -> {' + '.join(bits)})[0]"
+    )
 
 
 def lsh_neighbor_pairs(
@@ -925,12 +790,12 @@ def lsh_neighbor_pairs(
         )
     # round 11: the exact path carries each row's micro-unit array instead
     # of the raw vector — bucketing, norm², and the O(pairs) verify dot all
-    # run as BIGINT folds over it (bit-identical to the decimal spec, see
-    # vector.dot_units), and the unit quantization happens ONCE per row
+    # run as BIGINT folds over it (bit-identical to the decimal reference,
+    # see vector.dot_units_sql), and the unit quantization happens ONCE per row
     # instead of once per plane/pair element.
     if exact_decimal:
         src = ensure_parallelism(df).withColumn(
-            "_lsh_u", F.expr(V.units_arr_sql(_bq(vec_col)))
+            "_lsh_u", F.expr(V.units_arr_sql(ident_sql(vec_col)))
         )
         with_bucket = src.select(
             F.col(id_col),
@@ -968,7 +833,7 @@ def lsh_neighbor_pairs(
             # below reproduces the functions/vector.py formula bit for bit:
             # exact den = sqrt(na2_double * nb2_double), double den =
             # norm(a) * norm(b).
-            F.expr(V.norm_sql(_bq(vec_col))).alias("_den"),
+            F.expr(V.norm_sql(ident_sql(vec_col))).alias("_den"),
         )
         pair_col = vec_col
     def _chunk(bucket: Column, i: int) -> Column:
@@ -1039,7 +904,7 @@ def lsh_neighbor_pairs(
     # Value identity: a NULL cosine fails the lambda exactly as the old
     # NULL predicate dropped the row; survivors emit the identical rounded
     # value.  The threshold literal rides the exact repr() double cast like
-    # every other SQL-twin literal.
+    # every other rendered SQL literal.
     thr = f"CAST('{float(cosine_threshold)!r}' AS DOUBLE)"
     return joined.select(
         "id_a",
@@ -1126,7 +991,7 @@ def semantic_dedup(
     # caller orders afterwards.
     #
     # Exact mode carries each row's micro-unit array (_sd_u) through the
-    # exchange so the O(pairs) dot is a BIGINT fold (vector.dot_units,
+    # exchange so the O(pairs) dot is a BIGINT fold (vector.dot_units_sql,
     # bit-identical to dot_exact) — measured 7.6 s → 2.5 s on the sf0.1
     # declared x17 with outputs pinned identical.  The double path carries
     # the raw vector as before.
@@ -1139,7 +1004,7 @@ def semantic_dedup(
     if exact_decimal:
         pair_col = "_sd_u"
         base = ensure_parallelism(df).withColumn(
-            "_sd_u", F.expr(V.units_arr_sql(_bq(vec_col)))
+            "_sd_u", F.expr(V.units_arr_sql(ident_sql(vec_col)))
         )
         base = base.withColumn(
             "_sd_cluster",
@@ -1157,7 +1022,7 @@ def semantic_dedup(
         base = (
             ensure_parallelism(df)
             .withColumn("_sd_cluster", assign_centroid(vec_col, centroids, False))
-            .withColumn("_sd_den", F.expr(V.norm_sql(_bq(vec_col))))
+            .withColumn("_sd_den", F.expr(V.norm_sql(ident_sql(vec_col))))
         )
     # EXPLICIT numPartitions: the pair join is compute-bound (one array dot
     # per candidate pair) on tiny shuffle bytes, exactly the shape where
@@ -1206,8 +1071,9 @@ def semantic_dedup(
         den = "(_sd_dena * _sd_denb)"
         num = V.dot_sql("_sd_va", "_sd_vb")
     # one parsed predicate (round 11): CASE WHEN den > 0 THEN num/den END
-    # ≡ F.when(den > 0, num / den); the threshold literal rides an exact
-    # repr()-string double cast like every other SQL-twin literal
+    # (NULL, not a divide error, for a zero vector); the threshold literal
+    # rides an exact repr()-string double cast like every other rendered
+    # SQL literal
     pair_sim = (
         f"round(CASE WHEN {den} > 0 THEN {num} / {den} END, 6) "
         f">= CAST('{float(cosine_threshold)!r}' AS DOUBLE)"
@@ -1546,7 +1412,7 @@ def quantize_embeddings(
     the spec token for token (same casts, same HALF_UP round, same
     zero-scale CASE); value identity is pinned in tests/test_vector_units.py.
     """
-    v, sc = _bq(vec_col), _bq(scale_col)
+    v, sc = ident_sql(vec_col), ident_sql(scale_col)
     with_scale = df.withColumn(
         scale_col,
         F.expr(
@@ -1656,7 +1522,7 @@ def quantized_topk(
     # exact_decimal: decimal-exact rerank cosines (order-independent,
     # hash-stable vs a SQL oracle) — the declared x25 query's mode, in the
     # round-11 micro-unit formulation (bit-identical to cosine_exact, see
-    # vector.dot_units: num/den built from the same quantization, norms
+    # vector.dot_units_sql: num/den built from the same quantization, norms
     # hoisted per shortlist row instead of re-derived per cosine_exact
     # evaluation); the production default keeps the double fast path.
     if exact_decimal:

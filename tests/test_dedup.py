@@ -915,37 +915,65 @@ def test_jaccard_carried_n_plan_single_pass_join_free(spark, documents):
 
 
 def test_shingles_sql_twin_matches_column_spec(spark):
-    """Round-11 build-time pin: shingles_sql/tokens_sql (the one-parse SQL
-    renderers behind ngram_jaccard_pairs' carry path) must reproduce
-    shingles()/tokens() value-for-value on edge strings — whitespace runs,
-    Unicode whitespace (Java \\s is ASCII-only), short docs (< k fallback),
-    empty and NULL documents."""
+    """Round-11 build-time pin: tokens_sql must reproduce the tokens()
+    Column form value-for-value, and shingles_sql (the one shingle
+    definition, behind every expr-strategy dedup path) must produce the
+    literal expected arrays, on edge strings — whitespace runs, Unicode
+    whitespace (Java \\s is ASCII-only), short docs (< k fallback), empty
+    and NULL documents.  Spark's split keeps leading/trailing empty
+    tokens, so a padded document's edge shingles carry a space."""
     from pyspark.sql import functions as F
 
-    from r_e_hive__spark.functions.text import (
-        shingles,
-        shingles_sql,
-        tokens,
-        tokens_sql,
-    )
+    from r_e_hive__spark.functions.text import shingles_sql, tokens, tokens_sql
 
-    rows = [
-        ("a b c d e",),
-        ("  leading and   multiple   spaces ",),
-        ("one",),
-        ("two words",),
-        ("",),
-        (None,),
-        ("tab\tand\nnewline\rmix",),
-        ("nbsp stays one token",),  # Unicode WS: NOT a Java \s split
+    cases = [
+        ("a b c d e", ["a b c", "b c d", "c d e"]),
+        (
+            "  leading and   multiple   spaces ",
+            [" leading and", "leading and multiple", "and multiple spaces",
+             "multiple spaces "],
+        ),
+        ("one", ["one"]),
+        ("two words", ["two words"]),
+        ("", [""]),
+        (None, [""]),
+        ("tab\tand\nnewline\rmix", ["tab and newline", "and newline mix"]),
+        # Unicode WS: NOT a Java \s split
+        ("nbsp\xa0stays one\u2007token", ["nbsp\xa0stays one\u2007token"]),
     ]
-    df = spark.createDataFrame(rows, "t STRING")
+    df = spark.createDataFrame([(t,) for t, _ in cases], "t STRING")
     got = df.select(
+        "t",
         tokens(F.col("t")).alias("tok_c"),
         F.expr(tokens_sql("`t`")).alias("tok_s"),
-        shingles(F.col("t"), 3).alias("sh_c"),
         F.expr(shingles_sql("`t`", 3)).alias("sh_s"),
     ).collect()
+    want = dict(cases)
+    assert len(got) == len(cases)
     for r in got:
         assert r["tok_c"] == r["tok_s"]
-        assert r["sh_c"] == r["sh_s"]
+        assert r["sh_s"] == want[r["t"]], (r["t"], r["sh_s"])
+
+
+def test_struct_field_text_col_resolves(spark):
+    """A dotted ``text_col`` names a nested struct field (F.col semantics)
+    on every path that renders it into SQL text: both expr-strategy
+    ngram_jaccard_pairs paths (the carry-n SQL path used to quote
+    ``s.text`` as one identifier and fail UNRESOLVED_COLUMN), and
+    bm25_search, which must equal its result on the flattened column."""
+    from r_e_hive__spark.operators import ranking as R
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e g"), (3, "x y z")],
+        "id INT, text STRING",
+    )
+    nested = docs.select("id", F.struct("text").alias("s"))
+    for unique in (True, False):
+        got = D.ngram_jaccard_pairs(
+            nested, "s.text", "id", shingle_strategy="expr",
+            assume_unique_ids=unique,
+        ).collect()
+        assert [tuple(r) for r in got] == [(1, 2, 3, 4, 4, 0.6)], unique
+    flat = R.bm25_search(docs, "text", "id", ["c", "f"]).collect()
+    deep = R.bm25_search(nested, "s.text", "id", ["c", "f"]).collect()
+    assert deep == flat and len(flat) == 2

@@ -70,7 +70,6 @@ EXPECTED: dict[str, dict[str, int]] = {
     "text.normalize_ccnet": {},                # pandas_udf body, no JVM leaves
     "text.punct_ratio": {"regexp_": 1},
     "text.quality_score": {"split": 1, "regexp_": 1},  # r11: was 2 splits
-    "text.shingles": {"split": 1},
     "text.stopword_ratio": {"split": 1},       # r11 fix: was 2
     "text.subword_tokens": {"regexp_": 1},
     "text.tokens": {"split": 1},
@@ -79,6 +78,8 @@ EXPECTED: dict[str, dict[str, int]] = {
     "lm._bigram_pairs": {"split": 1},
     "quality.host_of": {"regexp_": 1, "parse_url": 1},
     "dedup._band_hash_expr": {},
+    "dedup._shingle_structs": {"split": 1},    # carry-path (shingle, n) structs
+    "dedup._shingles": {"split": 1},
     "dedup._first_matching_band": {},
     "dedup._sig_match_fraction": {},
     "dedup._simhash_chunk_expr": {},
@@ -105,10 +106,11 @@ def _modules():
 
 
 def _build_args(sig: inspect.Signature):
-    """Dummy arguments for a constructor: Column params get F.col, ints a
-    small literal, the conventional `grams`/`words` params a real gram
-    build / the stopword tuple (so grams-consuming constructors show the
-    leaf their binding must not duplicate).  Returns None when a required
+    """Dummy arguments for a constructor: Column params get F.col, column
+    NAME (str) params their own name, ints a small literal, the
+    conventional `grams`/`words` params a real gram build / the stopword
+    tuple (so grams-consuming constructors show the leaf their binding
+    must not duplicate).  Returns None when a required
     param can't be satisfied (constructor then must be excluded on its
     merits — today none is)."""
     args = []
@@ -122,6 +124,8 @@ def _build_args(sig: inspect.Signature):
             args.append(TX.STOPWORDS)
         elif ann is int or ann == "int":
             args.append(2)
+        elif ann is str or ann == "str":
+            args.append(p.name)
         elif ann is Column or ann == "Column" or ann is inspect.Parameter.empty:
             args.append(F.col(p.name))
         else:
@@ -176,6 +180,49 @@ def test_hof_leaf_budget(spark, qualname):
         f"{qualname}: leaf counts {got} != pinned {EXPECTED[qualname]} — "
         "an expensive subtree is referenced more than budgeted; let-bind "
         "it with functions.text.bind_once (see round-10 x16 fix)"
+    )
+
+
+# Pinned leaf budgets of the parsed-SQL renderers (functions that return
+# SQL text for F.expr), keyed like EXPECTED.  Each renders over a quoted
+# column name; the budget is counted on repr(F.expr(...)), the same tree
+# the Column constructors are counted on.
+SQL_RENDERERS: dict[str, tuple] = {
+    "text.shingles_sql": (lambda: TX.shingles_sql("`t`", 3), {"split": 1}),
+    "text.tokens_sql": (lambda: TX.tokens_sql("`t`"), {"split": 1}),
+    "ranking.tokenize_sql": (
+        lambda: _modules()["ranking"].tokenize_sql("`t`"),
+        {"split": 1},
+    ),
+}
+
+
+def test_sql_renderer_surface_complete():
+    """Every text renderer (``*_sql`` returning str) in the five hot-path
+    modules has a declared leaf budget and vice versa."""
+    found = set()
+    for mname, mod in _modules().items():
+        for name, fn in vars(mod).items():
+            if (
+                inspect.isfunction(fn)
+                and fn.__module__ == mod.__name__
+                and name.endswith("_sql")
+                and inspect.signature(fn).return_annotation in (str, "str")
+            ):
+                found.add(f"{mname}.{name}")
+    assert found == set(SQL_RENDERERS), (
+        f"missing budgets: {sorted(found - set(SQL_RENDERERS))}; "
+        f"stale budgets: {sorted(set(SQL_RENDERERS) - found)}"
+    )
+
+
+@pytest.mark.parametrize("qualname", sorted(SQL_RENDERERS))
+def test_sql_renderer_leaf_budget(spark, qualname):
+    render_sql, budget = SQL_RENDERERS[qualname]
+    got = {k: c for k, c in leaf_counts(F.expr(render_sql())).items() if c}
+    assert got == budget, (
+        f"{qualname}: leaf counts {got} != pinned {budget} — let-bind the "
+        "expensive subtree (transform(array(x), _v -> ...)[0])"
     )
 
 

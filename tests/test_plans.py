@@ -358,7 +358,7 @@ def test_hot_array_lambdas_tokenize_once(spark):
         # this keeps the original four-construct historical pin.
         return leaf_counts(col)["split"]
 
-    assert n_splits(TX.shingles(F.col("t"), 3)) == 1
+    assert n_splits(F.expr(TX.shingles_sql("`t`", 3))) == 1
     assert n_splits(TX.word_ngrams(F.col("t"), 2)) == 1
     assert n_splits(_bigram_pairs(F.col("t"))) == 1
     # top_ngram_fraction binds its gram argument: the grams tree (here a

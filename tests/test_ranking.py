@@ -452,10 +452,10 @@ def test_x23_fast_duckdb_disk_pairing_value_aligned(tmp_path):
 
 
 def test_bm25_backslash_quote_terms_match_column_spec(spark):
-    """ADVICE-r11 pin: the inline IN-list renders terms via _sql_str_lit
-    (backslashes doubled BEFORE quotes).  Under the session's pinned
-    escapedStringLiterals=false, a term like c:\\temp or a trailing-
-    backslash term must match the same docs as the postings path, whose
+    """ADVICE-r11 pin: the inline IN-list renders terms via
+    functions.str_lit_sql (backslashes doubled BEFORE quotes).  Under the
+    session's pinned escapedStringLiterals=false, a term like c:\\temp or a
+    trailing-backslash term must match the same docs as the postings path, whose
     term filter is the Column-API ``F.col('term').isin(terms)`` spec."""
     from r_e_hive__spark.operators import ranking as R
 
@@ -486,15 +486,18 @@ def test_bm25_backslash_quote_terms_match_column_spec(spark):
 
 
 def test_sql_str_lit_roundtrips_adversarial_terms(spark):
-    """_sql_str_lit(s) must parse back to exactly s for every term shape
-    the tokenizer can emit (backslashes, quotes, mixes, trailing '\\')."""
-    from r_e_hive__spark.operators.ranking import _sql_str_lit
+    """functions.str_lit_sql(s) (formerly ranking._sql_str_lit) must parse
+    back to exactly s for every term shape the tokenizer can emit
+    (backslashes, quotes, mixes, trailing '\\'), and refuses a non-str."""
+    from r_e_hive__spark.functions import str_lit_sql
 
     cases = ["plain", "c:\\temp", "end\\", "o'brien", "'\\''", "\\", "a''b\\\\c"]
     got = spark.sql(
-        "SELECT " + ",".join(_sql_str_lit(c) for c in cases)
+        "SELECT " + ",".join(str_lit_sql(c) for c in cases)
     ).first()
     assert list(got) == cases
+    with pytest.raises(TypeError):
+        str_lit_sql(3)
 
 
 def test_escaped_string_literals_conf_is_pinned():

@@ -79,16 +79,14 @@ def test_lsh_pairs_identical_to_legacy_shape(spark, embeddings):
         ).collect()
     }
     # Legacy shape, inlined: same bucketing, wide dedup-then-verify.
-    from r_e_hive__spark.operators.similarity import (
-        _paired_cosine,
-        hyperplane_bucket,
-    )
+    from r_e_hive__spark.functions.vector import cosine_sql
+    from r_e_hive__spark.operators.similarity import hyperplane_bucket
 
     r_bits = 16 // 4
     with_bucket = small.select(
         "vec_id",
         "embedding",
-        hyperplane_bucket(F.col("embedding"), 64, 16).alias("_bucket"),
+        hyperplane_bucket("embedding", 64, 16).alias("_bucket"),
     )
     chunks = with_bucket.select(
         "vec_id",
@@ -124,7 +122,7 @@ def test_lsh_pairs_identical_to_legacy_shape(spark, embeddings):
             .dropDuplicates(["id_a", "id_b"])
             .withColumn(
                 "cosine",
-                F.round(_paired_cosine(False, F.col("_va"), F.col("_vb")), 6),
+                F.round(F.expr(cosine_sql("_va", "_vb")), 6),
             )
             .where(F.col("cosine") >= 0.25)
             .select("id_a", "id_b", "cosine")
@@ -226,7 +224,7 @@ def test_hyperplane_bucket_null_vector_passes_through(spark):
         r["vec_id"]: r["b"]
         for r in df.select(
             "vec_id",
-            hyperplane_bucket(F.col("embedding"), dim=8, n_planes=4).alias("b"),
+            hyperplane_bucket("embedding", dim=8, n_planes=4).alias("b"),
         ).collect()
     }
     assert rows[2] == 0
@@ -306,7 +304,7 @@ def test_ivf_numpy_strategy_matches_expr(spark):
         "/root/testdata/sf0.001/embeddings.parquet"
     ).select("vec_id", "embedding")
     cand = emb.withColumn(
-        "bucket", assign_centroid(F.col("embedding"), _IVF_CENTROIDS)
+        "bucket", assign_centroid("embedding", _IVF_CENTROIDS)
     )
     q = (
         emb.where(F.col("vec_id") < 4)
@@ -314,7 +312,7 @@ def test_ivf_numpy_strategy_matches_expr(spark):
             F.col("vec_id").alias("query_id"),
             "embedding",
             F.explode(
-                probe_centroids(F.col("embedding"), _IVF_CENTROIDS, 2)
+                probe_centroids("embedding", _IVF_CENTROIDS, 2)
             ).alias("bucket"),
         )
     )
@@ -386,14 +384,39 @@ def test_persisted_ivf_index_partition_pruned_search(spark, clustered, tmp_path)
     )
 
 
-def test_hyperplane_bucket_sql_path_matches_column_path(spark):
-    """Round-11 build-time pin: hyperplane_bucket(str) — the one-parse
-    SQL fast path — must reproduce hyperplane_bucket(Column) bucket for
-    bucket in all three modes (frozen-planes exact, frozen-planes
-    double, default sin directions), including NULL vectors (bucket 0
-    semantics ride the NULL projection on both paths)."""
-    from pyspark.sql import functions as F
+def _hyperplane_bucket_py(v, dim, n_planes, planes, exact):
+    """Pure-Python hyperplane bucket: bit p set iff the projection on plane
+    p is > 0.  Exact mode projects HALF_UP micro-units onto the integer
+    planes in exact integer arithmetic; the double modes fold IEEE doubles
+    left to right in array order (sin directions: sin(p·1009 + i·9973)).
+    Returns (bucket, bits whose double projection is within 1e-9 of 0):
+    JVM Math.sin may differ from libm in the last ulp, so a sign that close
+    to the boundary is not a stable reference."""
+    from tests.test_vector_units import units_py
 
+    if v is None:
+        return 0, set()
+    bucket, fragile = 0, set()
+    for p in range(n_planes):
+        if exact:
+            proj = sum(units_py(x) * int(c) for x, c in zip(v, planes[p]))
+        else:
+            proj = 0.0
+            for i, x in enumerate(v):
+                c = float(planes[p][i]) if planes else math.sin(p * 1009 + i * 9973)
+                proj = proj + float(x) * c
+            if abs(proj) < 1e-9:
+                fragile.add(p)
+        if proj > 0:
+            bucket |= 1 << p
+    return bucket, fragile
+
+
+def test_hyperplane_bucket_matches_python_reference(spark):
+    """hyperplane_bucket in all three modes (frozen-planes exact,
+    frozen-planes double, default sin directions) against a pure-Python
+    sign computation, including a NULL vector (bucket 0: the NULL
+    projection sets no bit)."""
     from r_e_hive__spark.operators.similarity import hyperplane_bucket
     from r_e_hive__spark.queries._lsh_planes import _LSH_PLANES
 
@@ -412,14 +435,23 @@ def test_hyperplane_bucket_sql_path_matches_column_path(spark):
         dict(planes=_LSH_PLANES, exact=False),
         dict(planes=None, exact=False),
     ]
-    for kw in cases:
-        got = df.select(
-            "vec_id",
-            hyperplane_bucket("embedding", dim, 16, **kw).alias("s"),
-            hyperplane_bucket(F.col("embedding"), dim, 16, **kw).alias("c"),
-        ).collect()
-        for r in got:
-            assert r["s"] == r["c"], (r["vec_id"], kw)
+    rows = df.select(
+        "vec_id",
+        "embedding",
+        *[
+            hyperplane_bucket("embedding", dim, 16, **kw).alias(f"b{j}")
+            for j, kw in enumerate(cases)
+        ],
+    ).collect()
+    assert len(rows) == 201
+    for j, kw in enumerate(cases):
+        buckets = set()
+        for r in rows:
+            want, fragile = _hyperplane_bucket_py(r["embedding"], dim, 16, **kw)
+            mask = ~sum(1 << p for p in fragile)
+            assert r[f"b{j}"] & mask == want & mask, (r["vec_id"], kw)
+            buckets.add(r[f"b{j}"])
+        assert len(buckets) > 10, kw  # non-vacuous: real sign patterns
 
 
 def test_hyperplane_bucket_sql_guard_still_raises(spark):
@@ -439,15 +471,36 @@ def test_hyperplane_bucket_sql_guard_still_raises(spark):
 
 
 def test_bq_dotted_and_backtick_identifiers():
-    """ADVICE-r11 pin: _bq renders str column args with F.col semantics —
-    dots separate nested-field path segments, embedded backticks are
-    doubled per segment (no identifier breakout)."""
-    from r_e_hive__spark.operators.similarity import _bq
+    """ADVICE-r11 pin: functions.ident_sql (formerly similarity._bq)
+    renders str column args with F.col semantics — dots separate
+    nested-field path segments, embedded backticks are doubled per segment
+    (no identifier breakout) — and refuses anything but a str."""
+    from r_e_hive__spark.functions import ident_sql
 
-    assert _bq("embedding") == "`embedding`"
-    assert _bq("s.embedding") == "`s`.`embedding`"
-    assert _bq("we`ird") == "`we``ird`"
-    assert _bq("a.b`c") == "`a`.`b``c`"
+    assert ident_sql("embedding") == "`embedding`"
+    assert ident_sql("s.embedding") == "`s`.`embedding`"
+    assert ident_sql("we`ird") == "`we``ird`"
+    assert ident_sql("a.b`c") == "`a`.`b``c`"
+    with pytest.raises(TypeError, match="column name"):
+        ident_sql(42)
+
+
+def test_column_arguments_raise_type_error(spark):
+    """The name-taking expression builders refuse a Column with a plain
+    TypeError (a Column reaching str.split would otherwise fail as an
+    opaque "'Column' object is not callable")."""
+    from r_e_hive__spark.functions import ident_sql
+    from r_e_hive__spark.operators.similarity import (
+        assign_centroid,
+        hyperplane_bucket,
+    )
+
+    with pytest.raises(TypeError, match="column name"):
+        ident_sql(F.col("embedding"))
+    with pytest.raises(TypeError, match="column name"):
+        hyperplane_bucket(F.col("embedding"), dim=8, n_planes=4)
+    with pytest.raises(TypeError, match="column name"):
+        assign_centroid(F.col("embedding"), [[1.0, 0.0]])
 
 
 def test_brute_force_topk_nested_struct_vec_col(spark, embeddings):

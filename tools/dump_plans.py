@@ -7,7 +7,7 @@ Usage:
 Writes plans/r12/<query>_<tag>.txt (SPARK_GRAFT_PLAN_ROUND picks the
 round directory) for every benched query (relational bench=True set + LLM
 set + fastpath twins) and every RehiveAPI point read in ``API_READS``, or
-only the named ones.  Environment contract matches bench.py
+only the named ones (any declared or retired query may be named).  Environment contract matches bench.py
 (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS) so the captured plans are the
 plans the bench times.  The API reads run on ``RehiveAPI.from_fixtures``
 after one warm ``get_user`` (so the tables the API caches are
@@ -81,7 +81,14 @@ def main() -> None:
     qset.update(FASTPATHS)
     api_reads = sorted(API_READS)
     if only is not None:
-        qset = {n: f for n, f in qset.items() if n in only}
+        # a named query need not be benched: any declared or retired query
+        # (e.g. x4_lsh_neighbor_pairs) or fast-path twin can be dumped
+        named = {name: q.spark_fn for name, q in merged.items()}
+        named.update(FASTPATHS)
+        unknown = only - set(named) - set(API_READS)
+        if unknown:
+            raise SystemExit(f"unknown query names: {sorted(unknown)}")
+        qset = {n: f for n, f in named.items() if n in only}
         api_reads = [n for n in api_reads if n in only]
 
     spark = get_spark(app_name="rehive-dump-plans", master=f"local[{cpus}]")
