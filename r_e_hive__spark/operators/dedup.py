@@ -142,22 +142,24 @@ def _exploded_shingles_pandas(
     import pandas as pd
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-    fields = [StructField("_id", df.schema[id_col].dataType, True)]
-    fields += [
-        StructField(f"_b_{c}", df.schema[c].dataType, True) for c in block_cols
-    ]
+    # resolved here (dotted struct fields too); the worker reads by position
+    src = df.select(
+        F.col(id_col).alias("_id"),
+        *[F.col(c).alias(f"_b_{c}") for c in block_cols],
+        F.col(text_col).alias("_text"),
+    )
+    fields = [StructField(f.name, f.dataType, True) for f in src.schema.fields[:-1]]
     fields += [
         StructField("shingle", StringType(), False),
         StructField("_n", IntegerType(), False),
     ]
     out_schema = StructType(fields)
     ws = re.compile(r"[ \t\n\x0B\f\r]+")  # Java \s, NOT Python \s
-    cols = [id_col, *block_cols, text_col]
 
     def gen(batches):
         for pdf in batches:
             out = {f.name: [] for f in fields}
-            for row in pdf[cols].itertuples(index=False):
+            for row in pdf.itertuples(index=False):
                 rid, blocks, text = row[0], row[1:-1], row[-1]
                 toks = ws.split(text or "")
                 if len(toks) >= k:
@@ -175,7 +177,7 @@ def _exploded_shingles_pandas(
                     out["_n"].append(n)
             yield pd.DataFrame(out, columns=[f.name for f in fields])
 
-    return ensure_parallelism(df).mapInPandas(gen, out_schema)
+    return ensure_parallelism(src).mapInPandas(gen, out_schema)
 
 
 def ngram_jaccard_pairs(

@@ -36,10 +36,12 @@ the ``operators.reconcile`` lesson).
 from __future__ import annotations
 
 import math
-import os
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from r_e_hive__spark import storage
 
 # hard floor keeps tiny tables from degenerate m (and the probe cheap);
 # ceiling caps k at parquet-bloom-typical depth.
@@ -59,18 +61,10 @@ def _bloom_params(n_items: int, fpp: float) -> tuple[int, int]:
 def _max_file_rows(table_path: str) -> int:
     """Largest row count of any data file under ``table_path`` — footers
     only, no data scan (the ``layout.rowgroup_stats`` discipline)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = (
-        sorted(glob.glob(os.path.join(table_path, "**", "*.parquet"), recursive=True))
-        if os.path.isdir(table_path)
-        else [table_path]
-    )
+    files = storage.parquet_files(table_path)
     if not files:
         raise ValueError(f"no parquet files under {table_path}")
-    return max(pq.ParquetFile(f).metadata.num_rows for f in files)
+    return max(storage.footer(f).num_rows for f in files)
 
 
 _HASH_FNS = ("xxhash64", "md5")
@@ -129,7 +123,7 @@ def build_bloom_index(
     — the band-store lesson, a build/probe hash mismatch must be
     structurally impossible).
     """
-    df = spark.read.parquet(table_path)
+    df = spark.read.parquet(storage.spark_path(table_path))
     if col not in df.columns:
         raise ValueError(f"column {col!r} not in table at {table_path}")
     if hash_fn not in _HASH_FNS:
@@ -181,7 +175,7 @@ def build_bloom_index(
     )
     if out_path is not None:
         bits.write.mode("overwrite").parquet(out_path)
-        return spark.read.parquet(out_path)
+        return spark.read.parquet(storage.spark_path(out_path))
     return bits
 
 
@@ -200,7 +194,7 @@ def probe_positions(
     The literal is cast to the table column's type first; hashing
     ``lit(5)`` as int vs the column's bigint gives different bits.
     """
-    dtype = spark.read.parquet(table_path).schema[col].dataType
+    dtype = spark.read.parquet(storage.spark_path(table_path)).schema[col].dataType
     probe = F.lit(value).cast(dtype)
     row = spark.range(1).select(*_positions(probe, m, k, hash_fn)).first()
     return [int(v) for v in row]
@@ -240,16 +234,20 @@ def bloom_lookup(
     # column) are xxhash64 by construction (the legacy-store guard)
     cols = ["m", "k", "col"] + (["hash_fn"] if "hash_fn" in index.columns else [])
     meta = index.select(*cols).first()
+    base = spark.read.parquet(storage.spark_path(table_path))
     if meta is None:
-        return spark.read.parquet(table_path).where(F.col(col) == F.lit(value)).limit(0)
+        return base.where(F.col(col) == F.lit(value)).limit(0)
     if meta["col"] != col:
         raise ValueError(f"index is over {meta['col']!r}, probe is on {col!r}")
     hash_fn = meta["hash_fn"] if "hash_fn" in index.columns else "xxhash64"
     pos = probe_positions(
         spark, table_path, col, value, int(meta["m"]), int(meta["k"]), hash_fn
     )
-    kept = [r["file"] for r in bloom_prune(index, pos).select("file").collect()]
-    base = spark.read.parquet(table_path)
+    # ``file`` holds input_file_name()'s percent-encoded URI
+    kept = [
+        storage.spark_path(unquote(r["file"]))
+        for r in bloom_prune(index, pos).select("file").collect()
+    ]
     if not kept:
         return base.where(F.col(col) == F.lit(value)).limit(0)
     return (

@@ -32,6 +32,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from r_e_hive__spark import storage
+
 _BITS = 16
 _MAX_RANK = (1 << _BITS) - 1
 
@@ -150,32 +152,14 @@ def zorder_by(
 
 def rowgroup_stats(path: str, col: str) -> list[tuple]:
     """(min, max, n_rows) per parquet row group under ``path`` — read
-    from the footers only (pyarrow), no data scan."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
+    from the footers only, no data scan; a stats-less chunk reads as
+    (None, None, n_rows), which rowgroup_skip_fraction counts unskippable."""
     out = []
-    files = (
-        sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-        if os.path.isdir(path)
-        else [path]
-    )
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        names = {md.schema.column(i).name: i for i in range(len(md.schema))}
-        ci = names[col]
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ci).statistics
-            if st is None or not st.has_min_max:
-                # stats-less chunk (writer opted out, or all-null): a
-                # reader cannot prune it — surface as unbounded, and
-                # rowgroup_skip_fraction counts it unskippable (round-5
-                # review: st.min would have raised here)
-                out.append((None, None, md.row_group(rg).num_rows))
-            else:
-                out.append((st.min, st.max, md.row_group(rg).num_rows))
+    for f in storage.parquet_files(path):
+        ranges = storage.rowgroup_ranges(storage.footer(f), col)
+        if ranges is None:
+            raise KeyError(f"column {col!r} not in {f}")
+        out += ranges
     return out
 
 

@@ -19,50 +19,52 @@ parquet directories don't give you:
 
 Both are REPLACE-directory-contents jobs with the same atomicity
 contract as the rest of io.py (SURVEY.md §2.1 S5): the rewrite lands in
-a sibling temp dir first, then files swap in one pass — a crash leaves
+a staging dir first, then files swap in one pass — a crash leaves
 either the old file or the new file per path, never a half-written
-parquet (writes go to temp + rename).  A real deployment would wrap the
-swap in a manifest/lakehouse commit; the job structure (footer-pruned
-touch set, temp-dir staging) is the part that carries to 100 TB.
+parquet (writes go to staging + rename).  A real deployment would wrap
+the swap in a manifest/lakehouse commit; the job structure (footer-pruned
+touch set, staged rewrite) is the part that carries to 100 TB.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-import tempfile
+import contextlib
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _data_files(path: str) -> list[str]:
-    return sorted(
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    )
+from r_e_hive__spark import storage
 
 
 def _file_touches(f: str, col: str, lo, hi) -> bool:
     """Footer-only check: can this file contain rows with col in
-    [lo, hi]?  Stats-less chunks conservatively answer yes."""
-    import pyarrow.parquet as pq
+    [lo, hi]?  A file without the column or a stats-less chunk
+    conservatively answers yes."""
+    ranges = storage.rowgroup_ranges(storage.footer(f), col)
+    return ranges is None or any(
+        mn is None or not (mx < lo or mn > hi) for mn, mx, _ in ranges
+    )
 
-    md = pq.ParquetFile(f).metadata
-    names = {md.schema.column(i).name: i for i in range(len(md.schema))}
-    if col not in names:
-        return True
-    ci = names[col]
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(ci).statistics
-        if st is None or not st.has_min_max:
-            return True
-        if not (st.max < lo or st.min > hi):
-            return True
-    return False
+
+def _swap_in(path: str, old: list, rewrite: DataFrame, tag: str) -> int:
+    """Swap ``rewrite`` in for the ``old`` files (``FileInfo``) of the
+    table at ``path``: stage it in a ``_``-dir inside the table (readers
+    skip it), delete the old files, rename the new ones in.  Returns the
+    number of new files."""
+    fs, root = storage.resolve(path)
+    stage = f"_{tag}_{uuid.uuid4().hex}"
+    try:
+        rewrite.write.mode("overwrite").parquet(f"{path.rstrip('/')}/{stage}")
+        new = storage.parquet_files(f"{path.rstrip('/')}/{stage}")
+        for info in old:
+            fs.delete_file(info.path)
+        for info in new.values():
+            fs.move(info.path, f"{root}/part-{tag}-{uuid.uuid4().hex}.parquet")
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            fs.delete_dir(f"{root}/{stage}")
+    return len(new)
 
 
 def delete_where(
@@ -82,10 +84,11 @@ def delete_where(
     clustered table the touch set is O(matching data), not O(table).
     """
     hi = lo if hi is None else hi
-    files = _data_files(path)
+    files = storage.parquet_files(path)
     touched = [f for f in files if _file_touches(f, col, lo, hi)]
+    out = {"files_total": len(files), "files_touched": 0, "rows_deleted": 0}
     if not touched:
-        return {"files_total": len(files), "files_touched": 0, "rows_deleted": 0}
+        return out
 
     hit = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
     if extra_predicate is not None:
@@ -96,36 +99,15 @@ def delete_where(
     # rewrite, silently losing data beyond the requested delete (round-5
     # ADVICE, high).  The deleted count likewise counts only hit IS TRUE.
     hit = F.coalesce(hit, F.lit(False))
-    src = spark.read.parquet(*touched)
+    src = spark.read.parquet(*map(storage.spark_path, touched))
     n_del = src.where(hit).count()
     if n_del == 0:
-        return {"files_total": len(files), "files_touched": 0, "rows_deleted": 0}
+        return out
 
-    staging = tempfile.mkdtemp(
-        prefix="_cow_delete_", dir=os.path.dirname(os.path.abspath(path))
-    )
-    try:
-        # one file per touched input keeps the layout's clustering intact
-        src.where(~hit).coalesce(max(1, len(touched))).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        new_files = _data_files(staging)
-        # swap: drop the touched originals, move rewrites in under fresh
-        # names (no reader ever sees a half-written parquet: writes above
-        # went to the staging dir, moves are renames within one fs)
-        for f in touched:
-            os.remove(f)
-        for nf in new_files:
-            os.replace(
-                nf, os.path.join(path, f"part-cow-{uuid.uuid4().hex}.parquet")
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return {
-        "files_total": len(files),
-        "files_touched": len(touched),
-        "rows_deleted": n_del,
-    }
+    # one file per touched input keeps the layout's clustering intact
+    rewrite = src.where(~hit).coalesce(len(touched))
+    _swap_in(path, [files[f] for f in touched], rewrite, "cow")
+    return {**out, "files_touched": len(touched), "rows_deleted": n_del}
 
 
 def compact_files(
@@ -139,34 +121,15 @@ def compact_files(
     the job cost is O(small files), not O(table).  Returns
     {files_before, files_compacted, files_after_compaction}.
     """
-    files = _data_files(path)
-    small = [f for f in files if os.path.getsize(f) < target_bytes]
+    files = storage.parquet_files(path)
+    small = [f for f, info in files.items() if info.size < target_bytes]
+    out = {"files_before": len(files), "files_compacted": 0}
     if len(small) <= 1:
-        return {
-            "files_before": len(files),
-            "files_compacted": 0,
-            "files_after_compaction": 0,
-        }
-    total = sum(os.path.getsize(f) for f in small)
+        return {**out, "files_after_compaction": 0}
+    total = sum(files[f].size for f in small)
     n_out = max(1, (total + target_bytes - 1) // target_bytes)
-    staging = tempfile.mkdtemp(
-        prefix="_compact_", dir=os.path.dirname(os.path.abspath(path))
+    src = spark.read.parquet(*map(storage.spark_path, small))
+    n_new = _swap_in(
+        path, [files[f] for f in small], src.coalesce(n_out), "compact"
     )
-    try:
-        spark.read.parquet(*small).coalesce(int(n_out)).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        new_files = _data_files(staging)
-        for f in small:
-            os.remove(f)
-        for nf in new_files:
-            os.replace(
-                nf, os.path.join(path, f"part-compact-{uuid.uuid4().hex}.parquet")
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return {
-        "files_before": len(files),
-        "files_compacted": len(small),
-        "files_after_compaction": len(new_files),
-    }
+    return {**out, "files_compacted": len(small), "files_after_compaction": n_new}

@@ -346,71 +346,69 @@ def save_postings(
     PartitionFilter) and never re-aggregates corpus constants.  At 100 TB
     the postings build is the one expensive pass; every later query is a
     pruned scan of ~|query terms|/n_buckets of the index."""
+    from r_e_hive__spark import storage
+
+    postings = f"{path}/postings"
     p = term_postings(df, text_col, id_col)
     p.withColumn("term_bucket", term_bucket(F.col("term"), n_buckets)).write.mode(
         "overwrite"
-    ).partitionBy("term_bucket").parquet(f"{path}/postings")
+    ).partitionBy("term_bucket").parquet(postings)
     # stats from the JUST-WRITTEN index (a 2-column pruned read), not from
     # the lazy term_postings plan — that would re-run the whole
     # tokenize+explode+groupBy corpus pass a second time (round-8 review:
-    # "the one expensive pass" must actually be one)
-    try:
-        src = df.sparkSession.read.parquet(f"{path}/postings")
-    except Exception:
-        # zero retrievable documents: the partitioned write emits no
-        # parquet files and the read can't infer a schema — fall back to
-        # the lazy plan so the store still completes with n_docs=0 stats
-        # instead of dying half-written (round-8 third review)
-        src = p
+    # "the one expensive pass" must actually be one).  With zero
+    # retrievable documents the write emits no parquet files and a read
+    # can't infer a schema, so the lazy plan stands in and the store still
+    # completes with n_docs=0 stats (round-8 third review).
+    src = p
+    if storage.parquet_files(postings):
+        src = df.sparkSession.read.parquet(storage.spark_path(postings))
     corpus_stats(src, id_col).withColumn(
         "n_buckets", F.lit(n_buckets)
     ).write.mode("overwrite").parquet(f"{path}/stats")
 
 
 def _postings_layout(spark, path: str):
-    """(stats_df, full_schema, n_buckets) for a :func:`save_postings`
-    layout, read DRIVER-SIDE via pyarrow — zero Spark jobs (round 12).
-
-    The previous shape paid three jobs per load (stats schema inference,
-    a ``first()`` to fetch n_buckets, postings schema inference) — ~0.33 s
-    of every indexed search on this box, and at 100 TB each is a driver
-    round-trip to the object store.  The stats table is one row and the
-    postings schema is one parquet footer; both are driver-scale metadata
-    reads, exactly like the md5 bucket routing itself.  Types are mapped
-    with the same arrow→Spark conversion the Arrow runtime uses
-    (``from_arrow_schema``), so the frames are type-identical to the old
+    """(stats_df, full_schema, n_buckets, buckets) for a
+    :func:`save_postings` layout, read DRIVER-SIDE through
+    :mod:`r_e_hive__spark.storage` — zero Spark jobs (round 12): the one
+    stats row, one listing of ``postings/`` (``buckets`` = the bucket
+    numbers holding data files) and one footer.  A missing or unreadable
+    path raises.  ``spark.createDataFrame`` on an empty arrow table maps
+    the types (no job), so the frames are type-identical to Spark's own
     scans (parity pinned in tests/test_ranking.py roundtrip tests)."""
-    import glob
-    import os
-
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    stats_tbl = pq.read_table(os.path.join(path, "stats"))
+    from r_e_hive__spark import storage
+
+    fs, stats_path = storage.resolve(f"{path}/stats")
+    stats_tbl = pq.read_table(stats_path, filesystem=fs)
     if "n_buckets" not in stats_tbl.schema.names or stats_tbl.num_rows == 0:
         raise ValueError(
             f"load_postings: {path}/stats is not a postings layout"
         )
-    stats_schema = from_arrow_schema(stats_tbl.schema)
     stats_df = spark.createDataFrame(
-        [tuple(row.values()) for row in stats_tbl.to_pylist()], stats_schema
+        [tuple(row.values()) for row in stats_tbl.to_pylist()],
+        spark.createDataFrame(stats_tbl.schema.empty_table()).schema,
     )
     n_buckets = int(stats_tbl.column("n_buckets")[0].as_py())
-    footers = glob.glob(
-        os.path.join(path, "postings", "term_bucket=*", "*.parquet")
-    )
-    if not footers:
-        raise ValueError(
-            f"load_postings: {path}/postings holds no parquet files"
-        )
-    data_schema = from_arrow_schema(pq.read_schema(footers[0]))
+    root = f"{path}/postings"
+    files = storage.parquet_files(root)
+    if not files:
+        raise ValueError(f"load_postings: {root} holds no parquet files")
+    buckets = {
+        int(f[len(root) + 1 :].split("/")[0].removeprefix("term_bucket="))
+        for f in files
+    }
+    footer = storage.footer(next(iter(files))).schema.to_arrow_schema()
+    data_schema = spark.createDataFrame(footer.empty_table()).schema
     # the partition column rides the directory names; Spark's own
     # discovery would type the 0..n_buckets-1 values as int
     full_schema = StructType(
         list(data_schema.fields) + [StructField("term_bucket", IntegerType())]
     )
-    return stats_df.drop("n_buckets"), full_schema, n_buckets
+    return stats_df.drop("n_buckets"), full_schema, n_buckets, buckets
 
 
 def load_postings(spark, path: str) -> tuple[DataFrame, DataFrame, int]:
@@ -419,8 +417,10 @@ def load_postings(spark, path: str) -> tuple[DataFrame, DataFrame, int]:
     into ``bm25_search(stats=...)``; layout metadata (schema, n_buckets,
     the stats row) is read driver-side — no Spark job runs to open the
     index (round 12, see :func:`_postings_layout`)."""
-    stats, full_schema, n_buckets = _postings_layout(spark, path)
-    postings = spark.read.schema(full_schema).parquet(f"{path}/postings")
+    from r_e_hive__spark.storage import spark_path
+
+    stats, schema, n_buckets, _ = _postings_layout(spark, path)
+    postings = spark.read.schema(schema).parquet(spark_path(f"{path}/postings"))
     return postings, stats, n_buckets
 
 
@@ -434,30 +434,19 @@ def load_pruned_postings(
     two can never desync (round-8 review).
 
     Round 12: the scan is built over the probed buckets' DIRECTORIES
-    (``basePath`` + explicit per-bucket paths), so file listing touches
-    |query-term buckets| directories instead of all n_buckets — at 100 TB
-    the index listing, not the data, is the per-query floor.  The
-    ``term_bucket IN`` predicate still rides the scan as a
-    PartitionFilter (plan-pinned), and a query whose terms all route to
-    empty buckets returns an empty frame of the postings schema instead
-    of scanning anything."""
-    import os
+    (``basePath`` + explicit per-bucket paths), so Spark lists only
+    |query-term buckets| directories; ``term_bucket IN`` still rides the
+    scan as a PartitionFilter (plan-pinned).  Buckets holding no data
+    files are left out; if none remain, the result is an empty frame of
+    the postings schema and nothing is scanned."""
+    from r_e_hive__spark.storage import spark_path
 
-    from pyspark.sql.types import StructType
-
-    stats, full_schema, n_buckets = _postings_layout(spark, index_path)
+    stats, full_schema, n_buckets, present = _postings_layout(spark, index_path)
     buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
-    root = os.path.join(index_path, "postings")
-    dirs = [
-        d
-        for b in buckets
-        if os.path.isdir(d := os.path.join(root, f"term_bucket={b}"))
-    ]
+    root = f"{index_path}/postings"
+    dirs = [spark_path(f"{root}/term_bucket={b}") for b in buckets if b in present]
     if not dirs:
-        empty_schema = StructType(
-            [f for f in full_schema.fields if f.name != "term_bucket"]
-        )
-        return spark.createDataFrame([], empty_schema), stats
+        return spark.createDataFrame([], full_schema).drop("term_bucket"), stats
     pruned = (
         spark.read.option("basePath", root)
         .schema(full_schema)

@@ -372,13 +372,14 @@ def _analyzed_row_count(spark, table: str, sf_dir: str | None = None) -> int | N
     i.e. the driver's vanilla temp-view-only session.
 
     With ``sf_dir`` given, the catalog stat is trusted only when the
-    catalog table's byte size is within 8× of the sf_dir parquet file's —
-    a zero-job sanity band so a session whose catalog was ANALYZEd against
+    catalog table's byte size is within 8× of the sf_dir table's parquet
+    bytes (one file, or every data file of a Spark-written directory) — a
+    zero-job sanity band so a session whose catalog was ANALYZEd against
     a DIFFERENT scale factor cannot poison a broadcast decision for this
     one (both sides are parquet of the same rows, so genuine matches sit
     well inside the band while scale factors differ by orders of
     magnitude; code-review r4)."""
-    import os as _os
+    from r_e_hive__spark import storage
 
     try:
         db = spark.catalog.currentDatabase  # property pre-Spark-4, method in 4.x
@@ -403,7 +404,8 @@ def _analyzed_row_count(spark, table: str, sf_dir: str | None = None) -> int | N
                     stat_bytes = int(part.split()[0])
     if n_rows is not None and sf_dir is not None and stat_bytes:
         try:
-            file_bytes = _os.path.getsize(_os.path.join(sf_dir, f"{table}.parquet"))
+            files = storage.parquet_files(f"{sf_dir}/{table}.parquet")
+            file_bytes = sum(info.size for info in files.values())
         except OSError:
             file_bytes = None
         if file_bytes and not (1 / 8 <= stat_bytes / file_bytes <= 8):

@@ -223,7 +223,7 @@ def x14_cow_delete(spark, sf_dir):
     physical pipeline — footer min/max pruning touched the right files,
     the rewrite dropped exactly the matching rows and lost/duplicated
     nothing, and compaction is content-preserving (operators/
-    lifecycle.py; the temp-dir staging + swap atomicity contract).  At
+    lifecycle.py; the staging + swap atomicity contract).  At
     100 TB the touch set is O(matching data), not O(table): untouched
     files are never read past their footers.  The result frame is
     localCheckpoint-ed before the scratch table is deleted, so the

@@ -39,3 +39,20 @@ def oracle_smoke():
     con = duckdb_connection(SF_SMOKE)
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def path_forms():
+    """``spell(base, name)`` -> {form: path}: one fresh directory under
+    ``base`` per spelling the storage layer must read alike — a plain
+    path, a ``file://`` URI, and a name holding glob characters (which
+    Python's and Hadoop's globs would expand)."""
+
+    def spell(base, name: str) -> dict[str, str]:
+        return {
+            "plain": str(base / name),
+            "file_uri": f"file://{base / (name + '_uri')}",
+            "glob_chars": str(base / f"{name}[ab]*"),
+        }
+
+    return spell

@@ -16,12 +16,10 @@ from r_e_hive__spark.operators import index as bx
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def orders_path(spark, tmp_path_factory):
+def _write_orders(spark, out: str) -> None:
     """Orders rewritten as many files clustered by DATE — so a point
     lookup on o_custkey (uncorrelated with the layout) can only be
     pruned by the Bloom index, never by min/max."""
-    out = str(tmp_path_factory.mktemp("bloom") / "orders")
     (
         spark.read.parquet(f"{SF}/orders.parquet")
         .repartitionByRange(16, "o_orderdate")
@@ -29,6 +27,12 @@ def orders_path(spark, tmp_path_factory):
         .write.mode("overwrite")
         .parquet(out)
     )
+
+
+@pytest.fixture(scope="module")
+def orders_path(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("bloom") / "orders")
+    _write_orders(spark, out)
     return out
 
 
@@ -59,22 +63,33 @@ def test_index_shape_and_metadata(spark, orders_path, orders_index):
 
 
 def test_lookup_equals_plain_filter_no_false_negatives(
-    spark, orders_path, orders_index
+    spark, orders_path, tmp_path, path_forms
 ):
+    """Build + lookup over every path spelling (plain, ``file://`` URI,
+    glob characters): the index's file column must read back as the
+    same files, never as a glob or an undecoded URI."""
     base = spark.read.parquet(orders_path)
     keys = [
         r["o_custkey"]
         for r in base.select("o_custkey").distinct().orderBy("o_custkey").limit(40).collect()
     ]
-    for key in keys[::4] + keys[-3:]:
-        got = (
-            bx.bloom_lookup(spark, orders_path, orders_index, "o_custkey", key)
-            .orderBy("o_orderkey")
-            .collect()
+    wants = {
+        key: base.where(F.col("o_custkey") == key).orderBy("o_orderkey").collect()
+        for key in keys[::4] + keys[-3:]
+    }
+    assert all(wants.values())  # the pin is vacuous on an absent key
+    for form, path in path_forms(tmp_path, "orders").items():
+        _write_orders(spark, path)
+        index = bx.build_bloom_index(
+            spark, path, "o_custkey", out_path=f"{path}_idx"
         )
-        want = base.where(F.col("o_custkey") == key).orderBy("o_orderkey").collect()
-        assert got == want
-        assert len(want) > 0  # the pin is vacuous on an absent key
+        for key, want in wants.items():
+            got = (
+                bx.bloom_lookup(spark, path, index, "o_custkey", key)
+                .orderBy("o_orderkey")
+                .collect()
+            )
+            assert got == want, (form, key)
 
 
 def test_absent_values_mostly_skip_everything(spark, orders_path, orders_index):

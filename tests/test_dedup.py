@@ -959,8 +959,10 @@ def test_struct_field_text_col_resolves(spark):
     """A dotted ``text_col`` names a nested struct field (F.col semantics)
     on every path that renders it into SQL text: both expr-strategy
     ngram_jaccard_pairs paths (the carry-n SQL path used to quote
-    ``s.text`` as one identifier and fail UNRESOLVED_COLUMN), and
-    bm25_search, which must equal its result on the flattened column."""
+    ``s.text`` as one identifier and fail UNRESOLVED_COLUMN), the pandas
+    shingler (whose Arrow worker used to index the frame by the dotted
+    name and raise KeyError), and bm25_search, which must equal its
+    result on the flattened column."""
     from r_e_hive__spark.operators import ranking as R
 
     docs = spark.createDataFrame(
@@ -968,12 +970,15 @@ def test_struct_field_text_col_resolves(spark):
         "id INT, text STRING",
     )
     nested = docs.select("id", F.struct("text").alias("s"))
-    for unique in (True, False):
-        got = D.ngram_jaccard_pairs(
-            nested, "s.text", "id", shingle_strategy="expr",
-            assume_unique_ids=unique,
-        ).collect()
-        assert [tuple(r) for r in got] == [(1, 2, 3, 4, 4, 0.6)], unique
+    for strategy in ("expr", "pandas"):
+        for unique in (True, False):
+            got = D.ngram_jaccard_pairs(
+                nested, "s.text", "id", shingle_strategy=strategy,
+                assume_unique_ids=unique,
+            ).collect()
+            assert [tuple(r) for r in got] == [(1, 2, 3, 4, 4, 0.6)], (
+                strategy, unique,
+            )
     flat = R.bm25_search(docs, "text", "id", ["c", "f"]).collect()
     deep = R.bm25_search(nested, "s.text", "id", ["c", "f"]).collect()
     assert deep == flat and len(flat) == 2

@@ -100,6 +100,24 @@ def test_q5_gate_prefers_analyze_stats(spark):
         agg._Q5_GATE_SOURCE.pop(key, None)
 
 
+def test_analyzed_row_count_trusts_directory_table_bytes(spark, tmp_path):
+    """The stats-trust band compares the catalog's byte size with the
+    sf_dir table's parquet bytes.  For a Spark-written table DIRECTORY
+    those are the sum of its data files — the directory entry's own size
+    (4096 on ext4) would put a correct ANALYZE row count outside the 8×
+    band and send the gate back to probe jobs."""
+    from r_e_hive__spark.queries import aggregates as agg
+
+    rows = spark.range(100_000).selectExpr("id", "id % 97 AS v")
+    rows.write.parquet(str(tmp_path / "dir_sized.parquet"))
+    try:
+        rows.write.mode("overwrite").saveAsTable("dir_sized")
+        spark.sql("ANALYZE TABLE spark_catalog.default.dir_sized COMPUTE STATISTICS")
+        assert agg._analyzed_row_count(spark, "dir_sized", str(tmp_path)) == 100_000
+    finally:
+        spark.sql("DROP TABLE IF EXISTS spark_catalog.default.dir_sized")
+
+
 def test_bucketed_join_plans_with_zero_exchange(spark):
     """Co-located join via bucketing (SURVEY.md §1.4): orders and lineitem
     bucketed on the order key join with NO Exchange on either side — the

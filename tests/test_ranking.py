@@ -373,29 +373,29 @@ def test_bm25_term_filter_pushes_into_parquet_scan(spark, documents, tmp_path):
 
 
 def test_save_postings_roundtrip_and_indexed_search_parity(
-    spark, documents, tmp_path
+    spark, documents, tmp_path, path_forms
 ):
     """save_postings -> bm25_search_indexed must equal the inline
-    bm25_search on the same corpus/query, the probed bucket list must
-    reach the scan as a PartitionFilter (only the query terms' bucket
+    bm25_search on the same corpus/query for every path spelling (plain,
+    ``file://`` URI, glob characters), the probed bucket list must reach
+    the scan as a PartitionFilter (only the query terms' bucket
     directories are read), and the driver-side bucket router must agree
     with the Spark column it twins."""
     docs = documents.select("doc_id", "text")
-    path = str(tmp_path / "bm25_index")
-    R.save_postings(docs, "text", "doc_id", path, n_buckets=16)
     q = "the data model"
-    res, pruned, stats = R.bm25_search_indexed(
-        spark, path, q, "doc_id", top_k=15
-    )
     inline = R.bm25_search(docs, "text", "doc_id", q, top_k=15)
-    assert [r.asDict() for r in res.collect()] == [
-        r.asDict() for r in inline.collect()
-    ]
-    # bucket pruning is a PARTITION filter, not a post-scan one
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan, plan
-    pf = plan.split("PartitionFilters")[1][:300]
-    assert "term_bucket" in pf, pf
+    want = [r.asDict() for r in inline.collect()]
+    for form, path in path_forms(tmp_path, "bm25_index").items():
+        R.save_postings(docs, "text", "doc_id", path, n_buckets=16)
+        res, pruned, stats = R.bm25_search_indexed(
+            spark, path, q, "doc_id", top_k=15
+        )
+        assert [r.asDict() for r in res.collect()] == want, form
+        # bucket pruning is a PARTITION filter, not a post-scan one
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert "PartitionFilters" in plan, (form, plan)
+        pf = plan.split("PartitionFilters")[1][:300]
+        assert "term_bucket" in pf, (form, pf)
     # driver-side router == Spark column (the md5-prefix anchor)
     terms = R.tokenize_py(q)
     got = {
