@@ -51,13 +51,10 @@ _REQUIRED_CONFS = {
 }
 
 
-_confs_pinned: set[tuple] = set()
-
-
 def ensure_session_confs(spark: SparkSession) -> None:
     """Pin determinism-critical runtime confs on a possibly-vanilla session."""
-    key = _ctx_id(spark)
-    if key in _confs_pinned:
+    memo = session_memo(spark)
+    if ("confs",) in memo:
         return
     for k, v in _REQUIRED_CONFS.items():
         try:
@@ -65,7 +62,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
         except Exception:
             pass
     _ship_package(spark)
-    _confs_pinned.add(key)
+    memo[("confs",)] = True
 
 
 def remove_at_exit(path: str) -> None:
@@ -89,13 +86,12 @@ def _ship_package(spark: SparkSession) -> None:
     package functions (mapInPandas metadata extraction, stateful streaming)
     are pickled by module reference and the worker must import them.  Zip the
     package once and ``addPyFile`` it — the same mechanism used to deploy the
-    engine to a real cluster.
+    engine to a real cluster.  Reached once per context, through the conf
+    pin.
     """
     try:
         sc = spark.sparkContext
     except Exception:  # Connect-only session: workers share server-side path
-        return
-    if getattr(sc, "_rehive_pyfiles_added", False):
         return
     import tempfile
     import zipfile
@@ -117,7 +113,6 @@ def _ship_package(spark: SparkSession) -> None:
     remove_at_exit(zip_path)
     try:
         sc.addPyFile(zip_path)
-        sc._rehive_pyfiles_added = True
     except Exception:
         pass
 
@@ -140,10 +135,6 @@ def _ship_package(spark: SparkSession) -> None:
 _CACHE_TABLES = os.environ.get("SPARK_GRAFT_CACHE_TABLES", "1") != "0"
 _CACHE_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_CACHE_MAX_BYTES", str(1 << 30)))
 _MIN_SPLIT_BYTES = 512 * 1024  # ≥512 KB of parquet per rebalanced partition
-
-# (ctx, sf_dir, name) -> DataFrame, held per live SparkContext identity so a
-# restarted session never sees another JVM's plans.
-_table_cache: dict[tuple, DataFrame] = {}
 
 
 def nanos_long_to_ts(col_name: str):
@@ -174,13 +165,33 @@ def _ctx_id(spark: SparkSession) -> tuple:
         return (id(spark),)
 
 
+# _ctx_id -> that context's memo; at most one entry, the live context
+_memo: dict[tuple, dict] = {}
+
+
+def session_memo(spark: SparkSession) -> dict:
+    """The driver-side decisions remembered for ``spark``'s context: the
+    conf pin, loaded tables, text densities, broadcast gates, on-disk
+    indexes — each under a key whose first element names the kind.  The
+    first call for a new context drops every other context's entries: a
+    context id never repeats, so they are unreachable, and they would keep
+    a dead JVM's DataFrames referenced."""
+    ctx = _ctx_id(spark)
+    memo = _memo.get(ctx)
+    if memo is None:
+        _memo.clear()
+        memo = _memo[ctx] = {}
+    return memo
+
+
 def clear_table_cache() -> None:
-    for df in _table_cache.values():
-        try:  # release executor storage, not just the Python reference
-            df.unpersist()
-        except Exception:
-            pass
-    _table_cache.clear()
+    """Unpersist and forget every table ``load_table`` cached."""
+    for memo in _memo.values():
+        for key in [k for k in memo if k[0] == "table"]:
+            try:  # release executor storage, not just the Python reference
+                memo.pop(key).unpersist()
+            except Exception:
+                pass
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -195,8 +206,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     ensure_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (_ctx_id(spark), os.path.abspath(sf_dir), name)
-    cached = _table_cache.get(key)
+    memo = session_memo(spark)
+    key = ("table", os.path.abspath(sf_dir), name)
+    cached = memo.get(key)
     if cached is not None:
         return cached
     df = spark.read.parquet(path)
@@ -225,7 +237,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if parts > 1:
             df = df.repartition(parts)
         df = df.cache()
-    _table_cache[key] = df
+    memo[key] = df
     return df
 
 

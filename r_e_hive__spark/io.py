@@ -83,15 +83,9 @@ def sequence_ids(
     from pyspark.sql.window import Window
 
     if distributed is None:
-        from r_e_hive__spark.operators import plan_fits_broadcast
+        from r_e_hive__spark.operators.packing import _auto_distributed
 
-        # unreadable stats previously gated to the single-window path; keep
-        # that (shared-gate False means "does not fit" -> re-check stats)
-        try:
-            rows._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            distributed = not plan_fits_broadcast(rows)
-        except Exception:
-            distributed = False
+        distributed = _auto_distributed(rows)
     if not distributed:
         w = Window.orderBy(*order_cols)
         return rows.withColumn(out_col, F.row_number().over(w).cast("long"))
@@ -144,20 +138,24 @@ def append_returning(
     row per HTTP request), the two-phase distributed scheme when the batch
     is big (backfill/bulk-load shape).
     """
-    from pyspark.errors import AnalysisException
+    from r_e_hive__spark import storage
 
+    # a missing path or a directory with no data files is the first insert;
+    # any other failure (corrupt footer, FS error, permissions) propagates:
+    # restarting at base=0 would append duplicate ids with no error
     try:
-        base = spark.read.parquet(path).agg(F.max(id_col)).collect()[0][0] or 0
-    except AnalysisException:  # first insert into a not-yet-existing table
-        base = 0
-        # Any OTHER failure (corrupt footer, FS error, permissions) must
-        # propagate: silently restarting at base=0 would append duplicate
-        # ids — corruption with no error.
+        files = storage.parquet_files(path)
+    except FileNotFoundError:
+        files = {}
+    read_path = storage.spark_path(path)
+    base = 0
+    if files:
+        base = spark.read.parquet(read_path).agg(F.max(id_col)).collect()[0][0] or 0
     assigned = sequence_ids(rows, order_cols, out_col=id_col).withColumn(
         id_col, (F.lit(base) + F.col(id_col)).cast("long")
     )
     assigned.write.mode("append").format("parquet").save(path)
-    return spark.read.parquet(path).where(F.col(id_col) > base)
+    return spark.read.parquet(read_path).where(F.col(id_col) > base)
 
 
 def materialize_current_state(

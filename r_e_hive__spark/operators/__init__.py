@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from r_e_hive__spark.catalog import session_memo
+
 
 def ensure_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
     """Spread a narrow input across the cluster before CPU-heavy work.
@@ -101,11 +103,6 @@ def resolve_strategy(df: DataFrame, small: str, large: str, min_bytes: int) -> s
 FIXTURE_TEXT_CHARS = 300.0  # avg chars/doc of the calibration corpus
 ARROW_TAX_FLOOR_BYTES = 256 << 10  # below this the ~0.5 s tax never pays
 
-# (ctx identity, plan semantic hash, text col) -> measured avg chars/doc,
-# so repeated "auto" resolutions of the same input (every bench rep, every
-# reuse of a loaded table) pay the density job ONCE per session
-_density_cache: dict[tuple, float | None] = {}
-
 
 def _measured_text_density(df: DataFrame, text_col: str) -> float | None:
     """avg(length(text_col)) over the WHOLE frame — unbiased, unlike a
@@ -113,22 +110,16 @@ def _measured_text_density(df: DataFrame, text_col: str) -> float | None:
     corpus whose files are length-clustered (round-7 code review).  Only
     ever called inside the ambiguous band, where the input is < min_bytes
     (≈4 MB) by construction, so the full one-column scan is a trivial
-    job.  Cached per (session, semantic plan, column)."""
+    job.  Remembered per (session, semantic plan, column), so repeated
+    "auto" resolutions of the same input (every bench rep, every reuse of
+    a loaded table) pay the job once per session."""
     try:
-        sc = df.sparkSession.sparkContext
-        key = ((sc.applicationId, sc.startTime), df.semanticHash(), text_col)
+        memo = session_memo(df.sparkSession)
+        key = ("density", df.semanticHash(), text_col)
     except Exception:
-        key = None
-    if key is not None:
-        # evict entries from other sessions: (applicationId, startTime)
-        # never repeats, so stale keys are unreachable forever and the dict
-        # grows unboundedly in a long-lived multi-session process — same
-        # hygiene as fastpaths._BM25_DISK_INDEX (round-7 ADVICE)
-        ctx = key[0]
-        for k in [k for k in _density_cache if k[0] != ctx]:
-            _density_cache.pop(k, None)
-        if key in _density_cache:
-            return _density_cache[key]
+        memo = key = None
+    if key is not None and key in memo:
+        return memo[key]
     try:
         from pyspark.sql import functions as F
 
@@ -143,7 +134,7 @@ def _measured_text_density(df: DataFrame, text_col: str) -> float | None:
     except Exception:
         bpr, measured = None, False
     if key is not None and measured:
-        _density_cache[key] = bpr
+        memo[key] = bpr
     return bpr
 
 
@@ -183,9 +174,15 @@ def plan_fits_broadcast(df: DataFrame) -> bool:
     disabled) to "nothing fits"; unreadable stats/conf → False, the
     conservative (distributed) answer.  One implementation so a fix lands
     everywhere (round-4 code review)."""
+    return size_fits_broadcast(df, plan_size_bytes(df))
+
+
+def size_fits_broadcast(df: DataFrame, size: int | None) -> bool:
+    """:func:`plan_fits_broadcast` for a size already read from ``df``."""
+    if size is None:
+        return False
     try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         thresh = int(df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-        return 0 <= size <= max(thresh, 0)
     except Exception:
         return False
+    return 0 <= size <= max(thresh, 0)

@@ -38,16 +38,14 @@ from pyspark.sql.window import Window
 
 def _auto_distributed(df: DataFrame) -> bool:
     """True when Catalyst's size estimate exceeds the broadcast threshold
-    (shared gate: operators.plan_fits_broadcast).  NOTE the asymmetry with
-    the other call sites: unreadable stats gate to the SMALL-window path
-    here (False), preserving the original smoke-scale behavior."""
-    from r_e_hive__spark.operators import plan_fits_broadcast
+    (shared gate: operators.plan_fits_broadcast); the auto gate of this
+    prefix-sum and of ``io.sequence_ids``.  NOTE the asymmetry with the
+    other call sites: unreadable stats gate to the SMALL-window path here
+    (False), preserving the original smoke-scale behavior."""
+    from r_e_hive__spark import operators
 
-    try:
-        int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return False
-    return not plan_fits_broadcast(df)
+    size = operators.plan_size_bytes(df)
+    return size is not None and not operators.size_fits_broadcast(df, size)
 
 
 def weighted_prefix_sum(

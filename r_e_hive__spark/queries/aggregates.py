@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from r_e_hive__spark.catalog import _ctx_id
+from r_e_hive__spark.catalog import session_memo
 from r_e_hive__spark.functions import fixedpoint as fp
 from r_e_hive__spark.queries import query, retired_query
 from r_e_hive__spark.queries._util import T
@@ -240,9 +240,6 @@ GROUP BY l.l_orderkey, co.o_orderdate, co.o_orderpriority
 ORDER BY revenue DESC, l.l_orderkey LIMIT 10
 """
 
-_Q3_GATE_CACHE: dict[tuple, bool] = {}
-
-
 @query("q3_shipping_priority", _Q3, survey_rows=("J4", "A1", "O3"), bench=True)
 def q3_shipping_priority(spark, sf_dir):
     """Join-heavy 3-table aggregation with selective filters — exercises
@@ -277,7 +274,7 @@ def q3_shipping_priority(spark, sf_dir):
         n_seg = int(r.n_seg or 0)
         return (int(r.n_dated) * n_seg) // max(int(r.n_cust), 1), "probe"
 
-    broadcast_ok = _gated_broadcast(spark, sf_dir, _Q3_GATE_CACHE, estimate)
+    broadcast_ok = _gated_broadcast(spark, "q3", sf_dir, estimate)
     return spark.sql(_Q3_SPARK_BCAST if broadcast_ok else _Q3_SPARK)
 
 
@@ -356,12 +353,6 @@ ORDER BY revenue DESC, nation_name
 # count) overtakes shuffling the fact side, which is the 100 TB regime the
 # selective-first shuffle plan exists for.
 _Q5_BCAST_MAX_BUILD_ROWS = 4_000_000
-# strategy decision per (session, sf_dir): the cardinality probe is 3 tiny
-# jobs on cached dims — cached so steady-state executions pay zero probes
-_Q5_GATE_CACHE: dict[tuple, bool] = {}
-# audit trail: which estimator decided — "stats" (catalog ANALYZE rowCounts,
-# zero fact-table jobs) or "probe" (count jobs on the cached tables)
-_Q5_GATE_SOURCE: dict[tuple, str] = {}
 
 
 def _analyzed_row_count(spark, table: str, sf_dir: str | None = None) -> int | None:
@@ -413,26 +404,20 @@ def _analyzed_row_count(spark, table: str, sf_dir: str | None = None) -> int | N
     return n_rows
 
 
-def _gated_broadcast(
-    spark,
-    sf_dir: str,
-    cache: dict,
-    estimate,
-    source: dict | None = None,
-) -> bool:
+def _gated_broadcast(spark, name: str, sf_dir: str, estimate) -> bool:
     """Shared cardinality-gate machinery for the broadcast-vs-shuffle plan
-    choice (q3/q5): one decision per (session, sf_dir), cached so
-    steady-state executions pay zero probe jobs.  ``estimate`` returns
-    (estimated_build_rows, source_label)."""
-    key = (_ctx_id(spark), sf_dir)
-    ok = cache.get(key)
-    if ok is None:
+    choice (q3/q5): one decision per (session, query ``name``, sf_dir),
+    memoized so steady-state executions pay zero probe jobs.  ``estimate``
+    returns (estimated_build_rows, source); the memo entry keeps
+    (decision, source) — the source says which estimator decided: "stats"
+    (catalog ANALYZE rowCounts, zero fact-table jobs) or "probe" (count
+    jobs on the cached tables)."""
+    memo = session_memo(spark)
+    key = ("broadcast_gate", name, sf_dir)
+    if key not in memo:
         est_rows, src = estimate()
-        ok = est_rows <= _Q5_BCAST_MAX_BUILD_ROWS
-        cache[key] = ok
-        if source is not None:
-            source[key] = src
-    return ok
+        memo[key] = (est_rows <= _Q5_BCAST_MAX_BUILD_ROWS, src)
+    return memo[key][0]
 
 
 @retired_query("q5_local_supplier", _Q5, survey_rows=("J2", "J4", "A1"), bench=True)
@@ -494,7 +479,5 @@ def q5_local_supplier(spark, sf_dir):
         )
         return (orders.count() * n_local) // max(n_cust, 1), "probe"
 
-    broadcast_ok = _gated_broadcast(
-        spark, sf_dir, _Q5_GATE_CACHE, estimate, _Q5_GATE_SOURCE
-    )
+    broadcast_ok = _gated_broadcast(spark, "q5", sf_dir, estimate)
     return spark.sql(_Q5_SPARK_BCAST if broadcast_ok else _Q5_SPARK)

@@ -62,47 +62,38 @@ def x25_quantized_topk_fast(spark, sf_dir):
     )
 
 
-# (session identity, sf_dir) -> on-disk save_postings index path: the
-# production BM25 shape is index-once/search-many — the declared query
-# rebuilds the inverted index per run (the oracle-replay configuration),
-# which at search time is pure overhead.  Round 8 (VERDICT r7 item 5):
-# the index is now a REAL term-bucket-partitioned parquet artifact
-# (operators/ranking.save_postings), not a session cache — searches
-# partition-prune it, and the same directory would serve other sessions
-# and engines.
-_BM25_DISK_INDEX: dict[tuple, str] = {}
-
-
 def _bm25_disk_index(spark, sf_dir: str) -> str:
     """Build (once per session × sf_dir) the save_postings layout and
-    return its path.  The dir is deleted when this interpreter exits; dirs
-    of other sessions are left on disk — they may belong to a LIVE
-    concurrent process; only the dict entries (stale keys, unreachable
-    forever) are evicted."""
+    return its path.  The production BM25 shape is index-once/search-many
+    — the declared query rebuilds the inverted index per run (the
+    oracle-replay configuration), which at search time is pure overhead.
+    Round 8 (VERDICT r7 item 5): the index is a REAL
+    term-bucket-partitioned parquet artifact (``save_postings``), not a
+    session cache — searches partition-prune it, and the same directory
+    would serve other sessions and engines.  The dir is deleted when this interpreter exits; dirs of other sessions
+    are left on disk — they may belong to a LIVE concurrent process."""
     import hashlib
     import os
     import tempfile
 
-    from r_e_hive__spark.catalog import remove_at_exit
+    from r_e_hive__spark.catalog import remove_at_exit, session_memo
     from r_e_hive__spark.operators.ranking import save_postings
 
-    sc = spark.sparkContext
-    ctx = (sc.applicationId, sc.startTime)
-    key = (ctx, sf_dir)
-    for k in [k for k in _BM25_DISK_INDEX if k[0] != ctx]:
-        _BM25_DISK_INDEX.pop(k, None)
-    path = _BM25_DISK_INDEX.get(key)
+    memo = session_memo(spark)
+    key = ("bm25_index", sf_dir)
+    path = memo.get(key)
     if path is None:
         h = hashlib.md5(sf_dir.encode("utf-8")).hexdigest()[:10]
         path = os.path.join(
-            tempfile.gettempdir(), f"rehive_bm25_idx_{sc.applicationId}_{h}"
+            tempfile.gettempdir(),
+            f"rehive_bm25_idx_{spark.sparkContext.applicationId}_{h}",
         )
         (documents,) = T(spark, sf_dir, "documents")
         save_postings(
             documents.select("doc_id", "text"), "text", "doc_id", path
         )
         remove_at_exit(path)
-        _BM25_DISK_INDEX[key] = path
+        memo[key] = path
     return path
 
 

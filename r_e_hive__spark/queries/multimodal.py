@@ -10,6 +10,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from r_e_hive__spark.catalog import remove_at_exit
 from r_e_hive__spark.operators.multimodal import (
     extract_metadata,
     read_binary_dir,
@@ -26,6 +27,7 @@ def _blob_dir() -> str:
     global _BLOB_DIR
     if _BLOB_DIR is None:
         _BLOB_DIR = tempfile.mkdtemp(prefix="rehive_blobs_")
+        remove_at_exit(_BLOB_DIR)
         write_blob_fixtures(_BLOB_DIR)
         write_real_blob_fixtures(_BLOB_DIR)  # real PNG/WAV/BMP (round 4)
     return _BLOB_DIR

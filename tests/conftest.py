@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -56,3 +57,19 @@ def path_forms():
         }
 
     return spell
+
+
+_job_groups = itertools.count()
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs (job group + statusTracker;
+    a fresh group per call — ``id(fn)`` of a collected lambda recurs)."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, "")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -16,6 +16,7 @@ from decimal import Decimal
 import pytest
 
 from r_e_hive__spark.api import ApiError, RehiveAPI
+from tests.conftest import count_jobs
 
 TS = datetime.datetime(2024, 1, 22, 12, 0, 0)
 
@@ -576,18 +577,6 @@ def test_decision_sequence_property(spark):
 # ---------------------------------------------------------------------------
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs started while ``fn()`` runs (job group + statusTracker)."""
-    sc = spark.sparkContext
-    group = f"test-api-{id(fn)}"
-    sc.setJobGroup(group, "")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _plan_nodes(df) -> int:
     def count(node):
         kids = node.children()
@@ -645,7 +634,7 @@ def test_writes_run_no_job_and_keep_a_flat_plan(spark, api):
         api.add_commission("u0075", "1.00", "direct", TS)
 
     write()  # seeds the commissions/notifications marks (one max() each)
-    assert _jobs(spark, write) == 0
+    assert count_jobs(spark, write) == 0
     after_2 = _plan_nodes(api.t["commissions"])
     for _ in range(18):
         write()

@@ -13,7 +13,7 @@ from r_e_hive__spark.catalog import load_table
 from r_e_hive__spark.operators import dedup as D
 from r_e_hive__spark.operators import plan_size_bytes, resolve_strategy
 from r_e_hive__spark.operators import similarity as S
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -49,6 +49,31 @@ def test_resolve_strategy_sentinel_stats_pick_small(spark):
     if size is not None and size < (1 << 60):
         pytest.skip("this Spark estimates LocalRelation/RDD sizes for real")
     assert resolve_strategy(tiny, "expr", "pandas", 1) == "expr"
+
+
+@pytest.mark.parametrize(
+    "size, fits, distributed",
+    [(1024, True, False), ((1 << 63) - 1, False, True), (None, False, False)],
+    ids=["readable", "sentinel", "unreadable"],
+)
+def test_plan_size_gates(spark, monkeypatch, size, fits, distributed):
+    """``plan_size_bytes`` is the one reader of Catalyst's estimate.  The
+    broadcast gate and the auto gate of the packing prefix-sum and of
+    ``io.sequence_ids`` answer from it: Long.MaxValue (the no-estimate
+    sentinel) does not fit and goes distributed; unreadable stats do not
+    fit yet keep the small single-window path."""
+    from r_e_hive__spark import io, operators
+    from r_e_hive__spark.operators import packing
+
+    monkeypatch.setattr(operators, "plan_size_bytes", lambda df: size)
+    df = spark.range(8)
+    assert operators.plan_fits_broadcast(df) is fits
+    assert packing._auto_distributed(df) is distributed
+    seq = io.sequence_ids(df, [F.col("id")], out_col="seq")
+    # only the two-phase scheme joins its rows to the partition offsets
+    plan = seq._jdf.queryExecution().optimizedPlan().toString()
+    assert ("Join" in plan) is distributed, plan
+    assert sorted(tuple(r) for r in seq.collect()) == [(i, i + 1) for i in range(8)]
 
 
 def test_duplicate_spans_window1_null_text_parity(spark):
@@ -247,18 +272,18 @@ def test_text_gate_density_normalization(spark, tmp_path):
             SHINGLE_PANDAS_MIN_BYTES
         ), size  # both sit in the ambiguous band — the density decides
 
-    assert (
-        resolve_text_strategy(
-            long_df, "text", "expr", "pandas", SHINGLE_PANDAS_MIN_BYTES
+    def resolve(df):
+        return resolve_text_strategy(
+            df, "text", "expr", "pandas", SHINGLE_PANDAS_MIN_BYTES
         )
-        == "pandas"
-    )
-    assert (
-        resolve_text_strategy(
-            short_df, "text", "expr", "pandas", SHINGLE_PANDAS_MIN_BYTES
-        )
-        == "expr"
-    )
+
+    # the density is measured once per session and frame: the second
+    # resolution of the same frame runs no job
+    got = []
+    assert count_jobs(spark, lambda: got.append(resolve(long_df))) > 0
+    assert count_jobs(spark, lambda: got.append(resolve(long_df))) == 0
+    assert got == ["pandas", "pandas"]
+    assert resolve(short_df) == "expr"
 
 
 def test_fastpath_twins_match_declared(spark):

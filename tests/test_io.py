@@ -45,21 +45,24 @@ def test_partitioned_append_prunes(spark, tmp_path):
     assert "lang" in plan.split("PartitionFilters")[1][:200]
 
 
-def test_append_returning_contiguous_ids(spark, tmp_path):
-    p = str(tmp_path / "notif")
+def test_append_returning_contiguous_ids(spark, tmp_path, path_forms):
+    from r_e_hive__spark.storage import spark_path
+
     schema = "user_id string, message string"
-    batch1 = spark.createDataFrame(
-        [("u2", "m-b"), ("u1", "m-a")], schema
-    )
-    out1 = EIO.append_returning(
-        spark, batch1, p, "id", [F.col("user_id")]
-    )
-    got1 = {(r["id"], r["user_id"]) for r in out1.collect()}
-    assert got1 == {(1, "u1"), (2, "u2")}  # deterministic order, ids from 1
-    batch2 = spark.createDataFrame([("u3", "m-c")], schema)
-    out2 = EIO.append_returning(spark, batch2, p, "id", [F.col("user_id")])
-    assert [r["id"] for r in out2.collect()] == [3]
-    assert spark.read.parquet(p).count() == 3
+    for form, p in path_forms(tmp_path, "notif").items():
+        batch1 = spark.createDataFrame(
+            [("u2", "m-b"), ("u1", "m-a")], schema
+        )
+        out1 = EIO.append_returning(
+            spark, batch1, p, "id", [F.col("user_id")]
+        )
+        got1 = {(r["id"], r["user_id"]) for r in out1.collect()}
+        # deterministic order, ids from 1
+        assert got1 == {(1, "u1"), (2, "u2")}, form
+        batch2 = spark.createDataFrame([("u3", "m-c")], schema)
+        out2 = EIO.append_returning(spark, batch2, p, "id", [F.col("user_id")])
+        assert [r["id"] for r in out2.collect()] == [3], form
+        assert spark.read.parquet(spark_path(p)).count() == 3, form
 
 
 def test_materialize_current_state(spark, tmp_path):

@@ -63,20 +63,19 @@ def test_q5_gate_prefers_analyze_stats(spark):
     stat-less sessions (the driver's vanilla temp-view catalog) fall back to
     the probe counts.  Uses the in-memory session catalog — same DESCRIBE
     EXTENDED statistics surface as the Hive metastore, no Derby needed."""
-    from r_e_hive__spark.catalog import _ctx_id, load_table
+    from r_e_hive__spark.catalog import load_table, session_memo
     from r_e_hive__spark.queries import RETIRED, load_all
     from r_e_hive__spark.queries import aggregates as agg
 
     sf = "/root/testdata/sf0.001"
-    key = (_ctx_id(spark), sf)
+    key = ("broadcast_gate", "q5", sf)
     # q5 retired round 8 second wave; gate coverage continues via RETIRED
     q5 = {**load_all(), **RETIRED}["q5_local_supplier"]
 
     # stat-less: probe fallback
-    agg._Q5_GATE_CACHE.pop(key, None)
-    agg._Q5_GATE_SOURCE.pop(key, None)
+    session_memo(spark).pop(key, None)
     q5.spark_fn(spark, sf)
-    assert agg._Q5_GATE_SOURCE[key] == "probe"
+    assert session_memo(spark)[key][1] == "probe"
 
     orders = load_table(spark, sf, "orders")
     try:
@@ -86,18 +85,16 @@ def test_q5_gate_prefers_analyze_stats(spark):
         n = agg._analyzed_row_count(spark, "orders")
         assert n == orders.count()
 
-        agg._Q5_GATE_CACHE.pop(key, None)
-        agg._Q5_GATE_SOURCE.pop(key, None)
+        session_memo(spark).pop(key, None)
         df = q5.spark_fn(spark, sf)
-        assert agg._Q5_GATE_SOURCE[key] == "stats"
+        assert session_memo(spark)[key][1] == "stats"
         # and the stats-driven decision still yields the correct broadcast
         # plan + correct rows at this scale
-        assert agg._Q5_GATE_CACHE[key] is True
+        assert session_memo(spark)[key][0] is True
         assert df.count() > 0
     finally:
         spark.sql("DROP TABLE IF EXISTS spark_catalog.default.orders")
-        agg._Q5_GATE_CACHE.pop(key, None)
-        agg._Q5_GATE_SOURCE.pop(key, None)
+        session_memo(spark).pop(key, None)
 
 
 def test_analyzed_row_count_trusts_directory_table_bytes(spark, tmp_path):

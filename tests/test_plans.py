@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs
 
 
 def plan(df, mode: str = "formatted") -> str:
@@ -180,19 +180,22 @@ def test_running_balance_window_accumulates_in_long(spark):
 
 
 def test_q3_gate_picks_broadcast_then_shuffle(spark):
-    from r_e_hive__spark.catalog import _ctx_id
+    from r_e_hive__spark.catalog import session_memo
     from r_e_hive__spark.queries import load_all
-    from r_e_hive__spark.queries import aggregates as agg
 
     q3 = load_all()["q3_shipping_priority"]
-    key = (_ctx_id(spark), SF_SMOKE)
+    key = ("broadcast_gate", "q3", SF_SMOKE)
 
-    agg._Q3_GATE_CACHE.pop(key, None)
+    session_memo(spark).pop(key, None)
+    # the cold build runs the probe job; the memoized decision spares the
+    # warm build every job
+    assert count_jobs(spark, lambda: q3.spark_fn(spark, SF_SMOKE)) > 0
+    assert session_memo(spark)[key][0] is True
+    assert count_jobs(spark, lambda: q3.spark_fn(spark, SF_SMOKE)) == 0
     p = plan(q3.spark_fn(spark, SF_SMOKE), "simple")
-    assert agg._Q3_GATE_CACHE[key] is True
     assert "BroadcastHashJoin [l_orderkey" in p, p
 
-    agg._Q3_GATE_CACHE[key] = False
+    session_memo(spark)[key] = (False, "probe")
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -200,20 +203,19 @@ def test_q3_gate_picks_broadcast_then_shuffle(spark):
         assert "SortMergeJoin" in p_big or "ShuffledHashJoin" in p_big, p_big
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        agg._Q3_GATE_CACHE.pop(key, None)
+        session_memo(spark).pop(key, None)
 
 
 def test_q5_gate_picks_broadcast_then_shuffle(spark):
-    from r_e_hive__spark.catalog import _ctx_id
+    from r_e_hive__spark.catalog import session_memo
     from r_e_hive__spark.queries import RETIRED, load_all
-    from r_e_hive__spark.queries import aggregates as agg
 
     q5 = {**load_all(), **RETIRED}["q5_local_supplier"]
-    key = (_ctx_id(spark), SF_SMOKE)
+    key = ("broadcast_gate", "q5", SF_SMOKE)
 
-    agg._Q5_GATE_CACHE.pop(key, None)
+    session_memo(spark).pop(key, None)
     p = plan(q5.spark_fn(spark, SF_SMOKE), "simple")
-    assert agg._Q5_GATE_CACHE[key] is True
+    assert session_memo(spark)[key][0] is True
     # build side broadcast: the lineitem probe feeds a BroadcastHashJoin and
     # no exchange hashes on the lineitem join key
     assert "BroadcastHashJoin [l_orderkey" in p, p
@@ -221,7 +223,7 @@ def test_q5_gate_picks_broadcast_then_shuffle(spark):
     # force the at-scale decision and assert the shuffle plan comes back.
     # At smoke scale every table is under the auto-broadcast threshold, so
     # disable it for the check — at real scale the fact side exceeds it.
-    agg._Q5_GATE_CACHE[key] = False
+    session_memo(spark)[key] = (False, "probe")
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -229,7 +231,7 @@ def test_q5_gate_picks_broadcast_then_shuffle(spark):
         assert "SortMergeJoin" in p_big or "ShuffledHashJoin" in p_big, p_big
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        agg._Q5_GATE_CACHE.pop(key, None)
+        session_memo(spark).pop(key, None)
 
 
 # ---------------------------------------------------------------------------

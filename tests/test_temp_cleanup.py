@@ -1,8 +1,9 @@
 """Temp files the engine writes per process are deleted at interpreter
 exit: the package zip shipped to Python workers
-(``catalog._ship_package``) and the persisted BM25 index of the fast x23
-path (``queries.fastpaths._bm25_disk_index``).  Files of other
-processes stay."""
+(``catalog._ship_package``), the persisted BM25 index of the fast x23
+path (``queries.fastpaths._bm25_disk_index``) and the blob fixtures of
+the multimodal queries (``queries.multimodal._blob_dir``).  Files of
+other processes stay."""
 
 from __future__ import annotations
 
@@ -12,7 +13,8 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# fakes stand in for the session and the index build, so no JVM starts
+# fakes stand in for the session and the index build, so no JVM starts;
+# the blob fixture writers are pure Python
 _SCRIPT = r"""
 import os, sys, types
 from r_e_hive__spark import catalog
@@ -38,6 +40,10 @@ ranking.save_postings = save_postings
 fastpaths.T = lambda spark, sf_dir, *names: (Docs(),)
 path = fastpaths._bm25_disk_index(spark, "/sf")
 assert os.path.isdir(path), path
+
+from r_e_hive__spark.queries import multimodal
+blobs = multimodal._blob_dir()
+assert os.listdir(blobs), blobs
 """
 
 
